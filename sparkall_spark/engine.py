@@ -27,12 +27,16 @@ from sparkall_spark.mappings import (
 )
 from sparkall_spark.plans.parser import parse_sparql
 from sparkall_spark.plans.planner import QueryPlan, plan_query
+from sparkall_spark.sources import SourceCache
 
 
 class Engine:
     def __init__(self, spark: SparkSession, mappings: MappingIndex):
         self.spark = spark
         self.mappings = mappings
+        # resolved sources, reused across queries while their file
+        # listing is unchanged (resolution rule: sparkall_spark.sources)
+        self._sources = SourceCache(spark)
 
     @classmethod
     def from_rml(
@@ -67,9 +71,9 @@ class Engine:
             from sparkall_spark.plans.sqlgen import execute_sql_backend
 
             return execute_sql_backend(
-                self.spark, self._prep(query_text), self.mappings
+                self._sources, self._prep(query_text), self.mappings
             )
-        return execute_plan(self.spark, self.plan(query_text), self.mappings)
+        return execute_plan(self._sources, self.plan(query_text), self.mappings)
 
     def to_sql(self, query_text: str) -> str:
         """The single SQL statement the 'sql' backend would execute."""

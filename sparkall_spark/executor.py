@@ -37,7 +37,7 @@ from sparkall_spark.functions.transforms import apply_transform_chain
 from sparkall_spark.mappings import EntityMapping, MappingIndex
 from sparkall_spark.plans.model import Filter, ParsedQuery, Star
 from sparkall_spark.plans.planner import QueryPlan, plan_query
-from sparkall_spark.sources import load_source
+from sparkall_spark.sources import SourceCache
 
 
 class ExecutionError(RuntimeError):
@@ -75,22 +75,22 @@ def _filter_condition(col: Column, f: Filter, value: Column | None = None) -> Co
 
 
 def build_star_df(
-    spark: SparkSession,
+    sources: SourceCache,
     q: ParsedQuery,
     star: Star,
     needed_preds: set[str],
     project_subject: bool,
-    sources: list[EntityMapping],
+    mappings: list[EntityMapping],
 ) -> DataFrame:
     """Scan + project/alias + union for one star (SparkExecutor.scala:26-117)."""
-    if not sources:
+    if not mappings:
         raise ExecutionError(
             f"no relevant source for star ?{star.subject} "
             f"(predicates {sorted(star.predicates)}, class {star.class_iri})"
         )
     frames: list[DataFrame] = []
-    for m in sources:
-        raw = load_source(spark, m)
+    for m in mappings:
+        raw = sources.load(m)
         row_filters: list[Column] = []
         cols = [F.col(m.id_attr).alias(f"{star.subject}_ID")]
         for pred in sorted(needed_preds):
@@ -396,7 +396,7 @@ def _ancestor(blocks, c, root_idx: int) -> bool:
 
 
 def _apply_minus(
-    spark: SparkSession, df: DataFrame, q: ParsedQuery, index: MappingIndex
+    sources: SourceCache, df: DataFrame, q: ParsedQuery, index: MappingIndex
 ) -> DataFrame:
     """SPARQL MINUS / FILTER [NOT] EXISTS: anti/semi-join on shared vars.
 
@@ -418,7 +418,7 @@ def _apply_minus(
         mstar_dfs = {
             name: _apply_star_filters(
                 build_star_df(
-                    spark,
+                    sources,
                     mg,
                     star,
                     mplan.needed_preds[name],
@@ -452,14 +452,14 @@ _AGG_FNS = {
 
 
 def _attach_subqueries(
-    spark: SparkSession, df: DataFrame, q: ParsedQuery, index: MappingIndex
+    sources: SourceCache, df: DataFrame, q: ParsedQuery, index: MappingIndex
 ) -> DataFrame:
     """Join each { SELECT ... } subquery's result on its shared
     projected variables (SPARQL 1.1 §12: a subquery evaluates
     independently, then joins the enclosing group).  Subquery-only
     output vars surface under their plain names."""
     for sub in q.subqueries:
-        sub_df = execute_plan(spark, plan_query(sub), index)
+        sub_df = execute_plan(sources, plan_query(sub), index)
         shared = [
             v
             for v in sub.output_vars()
@@ -555,7 +555,7 @@ def _apply_binds(df: DataFrame, q: ParsedQuery) -> DataFrame:
 
 
 def _branch_core(
-    spark: SparkSession, plan: QueryPlan, index: MappingIndex
+    sources: SourceCache, plan: QueryPlan, index: MappingIndex
 ) -> DataFrame:
     """One UNION branch: joins + filters, projected to the select vars
     (unbound vars become nulls, SPARQL UNION semantics)."""
@@ -563,7 +563,7 @@ def _branch_core(
     star_dfs = {
         name: _apply_star_filters(
             build_star_df(
-                spark,
+                sources,
                 q,
                 star,
                 plan.needed_preds[name],
@@ -576,8 +576,8 @@ def _branch_core(
         for name, star in q.stars.items()
     }
     _apply_transforms(star_dfs, q, plan)
-    df = _attach_subqueries(spark, _join_stars(star_dfs, q, plan), q, index)
-    df = _apply_values(spark, df, q)
+    df = _attach_subqueries(sources, _join_stars(star_dfs, q, plan), q, index)
+    df = _apply_values(sources.spark, df, q)
     df = _apply_binds(df, q)
     bind_aliases = {b.alias for b in q.binds}
     sq_vars = q.subquery_vars()
@@ -631,7 +631,7 @@ def _apply_construct(df: DataFrame, q: ParsedQuery) -> DataFrame:
 
 
 def _apply_describe(
-    spark: SparkSession, sol: DataFrame, q: ParsedQuery, index: MappingIndex
+    sources: SourceCache, sol: DataFrame, q: ParsedQuery, index: MappingIndex
 ) -> DataFrame:
     """DESCRIBE materialization: for each described variable, semi-join
     every relevant source on the solution ids and unpivot ALL mapped
@@ -646,7 +646,7 @@ def _apply_describe(
         ids = sol.select(F.col(v).alias("__desc_id")).distinct()
         star = q.stars[v]
         for m in index.relevant_sources(star):
-            raw = load_source(spark, m)
+            raw = sources.load(m)
             sel = raw.join(
                 ids, raw[m.id_attr] == ids["__desc_id"], "leftsemi"
             )
@@ -690,18 +690,18 @@ def _apply_describe(
 
 
 def execute_plan(
-    spark: SparkSession, plan: QueryPlan, index: MappingIndex
+    sources: SourceCache, plan: QueryPlan, index: MappingIndex
 ) -> DataFrame:
-    df = _execute_solutions(spark, plan, index)
+    df = _execute_solutions(sources, plan, index)
     if plan.query.construct_template:
         df = _apply_construct(df, plan.query)
     if plan.query.describe_vars:
-        df = _apply_describe(spark, df, plan.query, index)
+        df = _apply_describe(sources, df, plan.query, index)
     return df
 
 
 def _execute_solutions(
-    spark: SparkSession, plan: QueryPlan, index: MappingIndex
+    sources: SourceCache, plan: QueryPlan, index: MappingIndex
 ) -> DataFrame:
     q = plan.query
 
@@ -713,7 +713,7 @@ def _execute_solutions(
             # branch probes at most one row (limit(1) pushes the early
             # stop into the scan), so the union is <= n_branches rows.
             dfs = [
-                _branch_core(spark, plan_query(b), index)
+                _branch_core(sources, plan_query(b), index)
                 .select(F.lit(1).alias("__one"))
                 .limit(1)
                 for b in [q] + q.union_branches
@@ -728,7 +728,7 @@ def _execute_solutions(
         if not order_vars <= set(q.select_vars):
             raise ExecutionError("UNION ORDER BY keys must be projected")
         dfs = [
-            _branch_core(spark, plan_query(b), index)
+            _branch_core(sources, plan_query(b), index)
             for b in [q] + q.union_branches
         ]
         df = dfs[0]
@@ -759,7 +759,7 @@ def _execute_solutions(
     star_dfs: dict[str, DataFrame] = {}
     for name, star in q.stars.items():
         df = build_star_df(
-            spark,
+            sources,
             q,
             star,
             plan.needed_preds[name],
@@ -770,9 +770,9 @@ def _execute_solutions(
     _apply_transforms(star_dfs, q, plan)
 
     df = _join_stars(star_dfs, q, plan)
-    df = _attach_subqueries(spark, df, q, index)
-    df = _apply_values(spark, df, q)
-    df = _apply_minus(spark, df, q, index)
+    df = _attach_subqueries(sources, df, q, index)
+    df = _apply_values(sources.spark, df, q)
+    df = _apply_minus(sources, df, q, index)
     df = _apply_binds(df, q)
 
     if q.is_ask:
@@ -905,12 +905,3 @@ def _execute_solutions(
     if q.limit is not None:
         df = df.limit(q.limit)
     return df
-
-
-def execute_sparql(
-    spark: SparkSession, query_text: str, index: MappingIndex
-) -> DataFrame:
-    from sparkall_spark.plans.parser import parse_sparql
-
-    plan = plan_query(parse_sparql(query_text))
-    return execute_plan(spark, plan, index)

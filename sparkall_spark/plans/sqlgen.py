@@ -20,6 +20,7 @@ federation.
 from __future__ import annotations
 
 import re
+import uuid
 from dataclasses import dataclass
 
 from sparkall_spark.functions.transforms import TransformError, _FN_RE
@@ -27,6 +28,7 @@ from sparkall_spark.plans.exprs import to_sql
 from sparkall_spark.mappings import EntityMapping, MappingIndex
 from sparkall_spark.plans.model import Filter, ParsedQuery
 from sparkall_spark.plans.planner import QueryPlan, plan_query
+from sparkall_spark.sources import SourceCache
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -35,6 +37,23 @@ RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 class CompiledSql:
     sql: str
     views: dict[str, EntityMapping]  # view name -> source to register
+
+
+class _Views(dict):
+    """View name -> source of one compile.  ``bind`` names a source's
+    view: the stable ``src_*``/``dsc_*`` name plus ``suffix``, which is
+    empty for ``compile_sql`` and unique per call for
+    ``execute_sql_backend`` (temp views are session-global, so a shared
+    name would let concurrent queries swap each other's sources)."""
+
+    def __init__(self, suffix: str = ""):
+        super().__init__()
+        self.suffix = suffix
+
+    def bind(self, name: str, mapping: EntityMapping) -> str:
+        name += self.suffix
+        self[name] = mapping
+        return name
 
 
 def _q(ident: str) -> str:
@@ -126,14 +145,13 @@ def _lit_auto(raw: str, force_str: bool = False) -> str:
 
 
 def _attach_subqueries_sql(
-    q: ParsedQuery, core: str, index: MappingIndex, views: dict
+    q: ParsedQuery, core: str, index: MappingIndex, views: _Views
 ) -> str:
     """SQL twin of executor._attach_subqueries: join each { SELECT ... }
     subquery (compiled recursively to its own single-SQL form) on its
     shared projected variables."""
     for i, sub in enumerate(q.subqueries):
-        sub_c = compile_sql(plan_query(sub), index)
-        views.update(sub_c.views)
+        sub_c = _compile(plan_query(sub), index, views)
         shared = [
             v
             for v in sub.output_vars()
@@ -216,7 +234,7 @@ def _star_subquery(
     plan: QueryPlan,
     star_name: str,
     sources: list[EntityMapping],
-    views: dict[str, EntityMapping],
+    views: _Views,
 ) -> str:
     star = q.stars[star_name]
     if not sources:
@@ -241,8 +259,10 @@ def _star_subquery(
 
     selects = []
     for m_idx, m in enumerate(sources):
-        view = f"src_{m.name.lower()}_{m_idx}" if len(sources) > 1 else f"src_{m.name.lower()}"
-        views[view] = m
+        view = views.bind(
+            f"src_{m.name.lower()}_{m_idx}" if len(sources) > 1 else f"src_{m.name.lower()}",
+            m,
+        )
         cols = []
         branch_filters: list[str] = []  # this source's mapping-declared filters
         for out_col, attr, pred in [(f"{star_name}_ID", m.id_attr, None)] + [
@@ -329,8 +349,7 @@ def _apply_construct_sql(q: ParsedQuery, sql: str) -> str:
 
 
 def _apply_describe_sql(
-    plan: QueryPlan, index: MappingIndex, views: dict[str, EntityMapping],
-    sql: str,
+    plan: QueryPlan, index: MappingIndex, views: _Views, sql: str,
 ) -> str:
     """DESCRIBE, SQL rendering: solution query -> CTE `sol`; one SELECT
     per (source, predicate) filtered by `id IN (SELECT var FROM sol)`,
@@ -345,8 +364,7 @@ def _apply_describe_sql(
     for v in q.describe_vars:
         star = q.stars[v]
         for mi, m in enumerate(index.relevant_sources(star)):
-            view = f"dsc_{m.name.lower()}_{mi}"
-            views[view] = m
+            view = views.bind(f"dsc_{m.name.lower()}_{mi}", m)
             member = f"{_q(m.id_attr)} IN (SELECT {_q(v)} FROM sol)"
             subj = f"CAST({_q(m.id_attr)} AS STRING) AS `subject`"
             for iri, attr in sorted(m.predicates.items()):
@@ -376,9 +394,12 @@ def _apply_describe_sql(
 
 
 def compile_sql(plan: QueryPlan, index: MappingIndex) -> CompiledSql:
+    return _compile(plan, index, _Views())
+
+
+def _compile(plan: QueryPlan, index: MappingIndex, views: _Views) -> CompiledSql:
     q = plan.query
     if q.union_branches:
-        views: dict[str, EntityMapping] = {}
         parts = []
         for b in [q] + q.union_branches:
             bplan = plan_query(b)
@@ -407,7 +428,6 @@ def compile_sql(plan: QueryPlan, index: MappingIndex) -> CompiledSql:
             outer += f" OFFSET {q.offset}"
         return CompiledSql(_apply_construct_sql(q, outer), views)
 
-    views = {}
     core = _core_sql(plan, index, views)
     core = _attach_subqueries_sql(q, core, index, views)
     core = _apply_values_sql(q, core)
@@ -548,7 +568,7 @@ def _apply_minus_sql(
     q: ParsedQuery,
     plan: QueryPlan,
     index: MappingIndex,
-    views: dict[str, EntityMapping],
+    views: _Views,
     core: str,
 ) -> str:
     """SPARQL MINUS / FILTER [NOT] EXISTS as LEFT ANTI/SEMI JOIN."""
@@ -578,7 +598,7 @@ def _apply_minus_sql(
 
 
 def _core_sql(
-    plan: QueryPlan, index: MappingIndex, views: dict[str, EntityMapping]
+    plan: QueryPlan, index: MappingIndex, views: _Views
 ) -> str:
     """FROM clause: star subqueries chained with JOIN ... ON, OPTIONAL
     blocks rendered as LEFT-joined UNIT subqueries (mirrors
@@ -749,7 +769,7 @@ def _core_sql(
 
 
 def _branch_sql(
-    plan: QueryPlan, index: MappingIndex, views: dict[str, EntityMapping]
+    plan: QueryPlan, index: MappingIndex, views: _Views
 ) -> str:
     q = plan.query
     core = _attach_subqueries_sql(q, _core_sql(plan, index, views), index, views)
@@ -775,13 +795,23 @@ def _branch_sql(
     return f"SELECT {', '.join(cols)} FROM {core}"
 
 
-def execute_sql_backend(spark, query_text: str, index: MappingIndex):
-    """Compile to one SQL string, register source views, run spark.sql."""
+def execute_sql_backend(
+    sources: SourceCache, query_text: str, index: MappingIndex
+):
+    """Compile to one SQL string, register each source (read through
+    ``sources``) under a view name unique to this call, run
+    ``spark.sql``.  The views are dropped once ``spark.sql`` has
+    analysed the statement: the returned DataFrame holds the resolved
+    plan, not the names."""
     from sparkall_spark.plans.parser import parse_sparql
-    from sparkall_spark.sources import load_source
 
     plan = plan_query(parse_sparql(query_text))
-    compiled = compile_sql(plan, index)
-    for view, mapping in compiled.views.items():
-        load_source(spark, mapping).createOrReplaceTempView(view)
-    return spark.sql(compiled.sql)
+    compiled = _compile(plan, index, _Views(f"_{uuid.uuid4().hex}"))
+    spark = sources.spark
+    try:
+        for view, mapping in compiled.views.items():
+            sources.load(mapping).createOrReplaceTempView(view)
+        return spark.sql(compiled.sql)
+    finally:
+        for view in compiled.views:
+            spark.catalog.dropTempView(view)

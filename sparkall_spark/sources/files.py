@@ -13,6 +13,9 @@ schema merging at 100 TB is a full-footer scan.
 
 from __future__ import annotations
 
+import os
+from urllib.parse import urlsplit
+
 from pyspark.sql import DataFrame, SparkSession
 
 from sparkall_spark.mappings import EntityMapping
@@ -70,3 +73,39 @@ def read_text(spark: SparkSession, mapping: EntityMapping) -> DataFrame:
     if str(opts.get("wholetext", "")).lower() == "true":
         df = df.withColumn("file", F.input_file_name())
     return df
+
+
+def file_listing(spark: SparkSession, source: str) -> tuple:
+    """Sorted ``(path, size, mtime_ns)`` of every file at or under the
+    local path ``source`` (recursively, hidden files included), i.e. a
+    superset of what a file reader lists.  Raises ``OSError`` for a path
+    that names no file (a glob pattern does not) and for any source
+    outside the local file system, so callers can fall back to an
+    uncached read."""
+    parts = urlsplit(source)
+    if parts.scheme == "file":
+        return _local_listing(parts.path)
+    if parts.scheme or not (
+        spark._jsc.hadoopConfiguration()
+        .get("fs.defaultFS", "file:///")
+        .startswith("file:")
+    ):
+        raise OSError(f"not a local file source: {source}")
+    return _local_listing(source)
+
+
+def _local_listing(path: str) -> tuple:
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((path, st.st_size, st.st_mtime_ns),)
+    out = []
+    stack = [path]
+    while stack:
+        with os.scandir(stack.pop()) as entries:
+            for e in entries:
+                if e.is_dir():
+                    stack.append(e.path)
+                else:
+                    st = e.stat()
+                    out.append((e.path, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
