@@ -1,8 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``queries()`` covers SURVEY.md §2's operator inventory via the SPARQL
-engine (q-entries, incl. the ported BSBM evaluation shapes and two
-entries routed through the single-SQL backend) plus the
+engine (q-entries, incl. the ported BSBM evaluation shapes) plus the
 LLM-data-pipeline extension operators (e-entries: dedup, similarity
 search, text analysis, RDF ingestion, temporal joins, OLAP rollups).
 EVERY entry has a DuckDB oracle in ``oracle_sql()`` — including the
@@ -79,10 +78,8 @@ SPARQL_QUERIES: dict[str, tuple[str, str | None]] = {
         ORDER BY p_name, p_size DESC, p LIMIT 50
         """,
     ),
-    # 3-star join + numeric and string filters (mixed ops).
-    # Runs through backend="sql" (the reference's Presto single-SQL
-    # path analog) — see SQL_BACKEND_KEYS below.  The plain 2-star
-    # join shape it subsumes stays covered by tests/test_sqlgen.py.
+    # 3-star join + numeric and string filters (mixed ops).  The plain
+    # 2-star join shape it subsumes stays covered by tests/test_sqlgen.py.
     "q03_join_filters": (
         """
         SELECT ?cname ?qty ?totalprice WHERE {
@@ -4492,35 +4489,10 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# These entries execute through Engine.sparql(backend="sql") — the
-# reference's Presto single-SQL path analog (compile_sql -> ONE
-# spark.sql statement) — so the driver hash-checks the SQL backend
-# against the DuckDB oracle, not just the DataFrame backend.
-# q06 (BIND + expression filter) and q34 (property path + GROUP_CONCAT
-# + expressions) route the round-3 grammar surface through it.
-SQL_BACKEND_KEYS = {
-    "q03_join_filters",
-    "q25_bsbm_q1",
-    "q06_bind_rlike",
-    "q34_path_groupconcat",
-    # r4: UNION + path-alternation shapes through the compiled-SQL route
-    "q19_sparql_union",
-}
-
-
-def _sparql_sql(text: str):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _engine(spark, sf_dir).sparql(PREFIX_BLOCK + text, backend="sql")
-
-    return run
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for name, (text, _oracle) in SPARQL_QUERIES.items():
-        if name in SQL_BACKEND_KEYS:
-            out[name] = _sparql_sql(text)
-        elif name not in ("q05_groupby_aggregates", "q20_having"):
+        if name not in ("q05_groupby_aggregates", "q20_having"):
             out[name] = _sparql(text)
     out["q05_groupby_aggregates"] = _q05
     out["q20_having"] = _q20_having

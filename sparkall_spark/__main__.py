@@ -5,7 +5,7 @@ join ordering belongs to AQE/CBO, so the surface is three files plus
 session knobs).
 
     python -m sparkall_spark QUERY.sparql MAPPINGS.ttl [CONFIG.json]
-        [--master local[8]] [--limit 20] [--explain] [--backend sql]
+        [--master local[8]] [--limit 20] [--explain]
 """
 
 from __future__ import annotations
@@ -25,13 +25,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--master", default=None, help="Spark master (default local[N])")
     ap.add_argument("--limit", type=int, default=20, help="rows to print")
     ap.add_argument("--explain", action="store_true", help="print the physical plan")
-    ap.add_argument(
-        "--backend",
-        choices=("dataframe", "sql"),
-        default="dataframe",
-        help="execution backend: DataFrame pipeline or compiled single-SQL "
-        "(the reference's Spark/Presto engine choice, Main.scala:9-30)",
-    )
     args = ap.parse_args(argv)
 
     from sparkall_spark.engine import Engine
@@ -44,9 +37,9 @@ def main(argv: list[str] | None = None) -> int:
     analysis_done = time.perf_counter()
 
     if args.explain:
-        engine.explain(query_text, backend=args.backend)
+        engine.explain(query_text)
         return 0
-    count = engine.run(query_text, n=args.limit, backend=args.backend)
+    count = engine.run(query_text, n=args.limit)
     print(
         f"analysis {analysis_done - t0:.2f}s, "
         f"execution {time.perf_counter() - analysis_done:.2f}s, "

@@ -8,8 +8,8 @@
 
 Mirrors the reference lifecycle (Run.scala:17-318: parse -> plan ->
 mapping consultation -> per-star build -> join -> group/order/project/
-limit -> actions) but parses once, builds one lazy plan, and leaves
-actions to the caller.
+limit -> actions) but parses once, lowers the query to one SQL
+statement (plans/sqlgen.py), and leaves actions to the caller.
 """
 
 from __future__ import annotations
@@ -18,7 +18,6 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sparkall_spark.executor import execute_plan
 from sparkall_spark.mappings import (
     MappingIndex,
     SourceCatalog,
@@ -27,6 +26,7 @@ from sparkall_spark.mappings import (
 )
 from sparkall_spark.plans.parser import parse_sparql
 from sparkall_spark.plans.planner import QueryPlan, plan_query
+from sparkall_spark.plans.sqlgen import compile_sql, execute_sql_backend
 from sparkall_spark.sources import SourceCache
 
 
@@ -58,39 +58,27 @@ class Engine:
     def plan(self, query_text: str) -> QueryPlan:
         return plan_query(parse_sparql(self._prep(query_text)))
 
-    def sparql(self, query_text: str, backend: str = "dataframe") -> DataFrame:
-        """Compile one SPARQL query to one lazy DataFrame.
-
-        ``backend='dataframe'`` builds the plan with DataFrame ops;
-        ``backend='sql'`` compiles the whole query to ONE SQL string and
-        runs it via ``spark.sql`` (the reference's Presto/DataQueryFrame
-        path re-expressed on Spark — both backends produce the same
-        Catalyst plan shape and identical results).
-        """
-        if backend == "sql":
-            from sparkall_spark.plans.sqlgen import execute_sql_backend
-
-            return execute_sql_backend(
-                self._sources, self._prep(query_text), self.mappings
-            )
-        return execute_plan(self._sources, self.plan(query_text), self.mappings)
+    def sparql(self, query_text: str) -> DataFrame:
+        """Compile one SPARQL query to one lazy DataFrame: the whole
+        query becomes ONE SQL string run via ``spark.sql`` (the
+        reference's Presto/DataQueryFrame path re-expressed on Spark)."""
+        return execute_sql_backend(
+            self._sources, self._prep(query_text), self.mappings
+        )
 
     def to_sql(self, query_text: str) -> str:
-        """The single SQL statement the 'sql' backend would execute."""
-        from sparkall_spark.plans.sqlgen import compile_sql
-
+        """The single SQL statement ``sparql`` executes, under stable
+        ``src_*``/``dsc_*`` view names."""
         return compile_sql(self.plan(query_text), self.mappings).sql
 
-    def explain(
-        self, query_text: str, mode: str = "formatted", backend: str = "dataframe"
-    ) -> None:
-        self.sparql(query_text, backend=backend).explain(mode)
+    def explain(self, query_text: str, mode: str = "formatted") -> None:
+        self.sparql(query_text).explain(mode)
 
-    def run(self, query_text: str, n: int = 20, backend: str = "dataframe") -> int:
+    def run(self, query_text: str, n: int = 20) -> int:
         """Reference-style console sink (SparkExecutor.scala:543-556) minus
         its double execution: one cached frame serves both the preview and
         the count."""
-        df = self.sparql(query_text, backend=backend)
+        df = self.sparql(query_text)
         df.persist()
         try:
             df.show(n, truncate=False)

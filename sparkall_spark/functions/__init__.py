@@ -1,3 +1,3 @@
-from sparkall_spark.functions.transforms import apply_transform_chain, transform_column
+from sparkall_spark.functions.transforms import transform_chain_sql, transform_sql
 
-__all__ = ["apply_transform_chain", "transform_column"]
+__all__ = ["transform_chain_sql", "transform_sql"]

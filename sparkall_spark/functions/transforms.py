@@ -1,22 +1,22 @@
-"""The closed transformation-function set of the reference, as Column ops.
+"""The closed transformation-function set of the reference, as Spark SQL.
 
 Reference surface (SparkExecutor.scala:202-239, §2.8 of SURVEY.md):
 ``toInt``, ``scl(+N|-N|*N)``, ``skp(v)``, ``substit(a,b)``,
 ``replc(a,b)``, ``prefix(s)``, ``postfix(s)``.  Reference bugs fixed
-here by design: ``substit`` uses when().otherwise() so non-matching rows
-keep their value (reference nulls them, SparkExecutor.scala:219-225),
-and ``prefix``/``postfix`` argument parsing is not string-mangled
+here by design: ``substit`` is a CASE so non-matching rows keep their
+value (reference nulls them, SparkExecutor.scala:219-225), and
+``prefix``/``postfix`` argument parsing is not string-mangled
 (reference strips the wrong literal, SparkExecutor.scala:233,239).
 
-``skp`` is a row filter, not a column expression, so the applier
-returns (column, optional_filter).
+Each function rewrites a SQL expression string.  ``skp`` is a row
+filter, not a column expression, so a step returns (expression,
+optional filter); a chain collects every filter on the expression at
+ITS position, so ``toInt.skp(4).scl(+1)`` drops raw value 4, not 3.
 """
 
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import Column, functions as F
 
 
 class TransformError(ValueError):
@@ -26,77 +26,70 @@ class TransformError(ValueError):
 _FN_RE = re.compile(r"^(\w+)(?:\((.*)\))?$")
 
 
-def transform_column(col: Column, fn: str) -> tuple[Column, Column | None]:
-    """Apply one DSL function; returns (new column, optional row-filter)."""
+def transform_sql(expr: str, fn: str) -> tuple[str, str | None]:
+    """Apply one DSL function to ``expr``; returns (new expression,
+    optional row filter)."""
     m = _FN_RE.match(fn.strip())
     if not m:
         raise TransformError(f"bad transformation: {fn!r}")
-    name, arg = m.group(1), (m.group(2) or "")
-    arg = arg.strip()
-
-    # try_cast: reference semantics are null-on-failure (Spark 2.4 casts);
-    # Spark 4 ANSI mode would throw on malformed input otherwise
+    name, arg = m.group(1), (m.group(2) or "").strip()
+    # TRY_CAST: reference semantics are null-on-failure (Spark 2.4
+    # casts); Spark 4 ANSI mode would throw on malformed input otherwise
     if name == "toInt":
-        return col.try_cast("int"), None
+        return f"TRY_CAST({expr} AS INT)", None
     if name == "toLong":
-        return col.try_cast("bigint"), None
+        return f"TRY_CAST({expr} AS BIGINT)", None
     if name == "toDouble":
-        return col.try_cast("double"), None
+        return f"TRY_CAST({expr} AS DOUBLE)", None
     if name == "toStr":
-        return col.cast("string"), None
+        return f"CAST({expr} AS STRING)", None
     if name == "scl":
         # scl(+60) / scl(-60) / scl(*2) — also reference's scl(_+60) spelling
         sm = re.match(r"^_?\s*([+\-*/])\s*(-?\d+(?:\.\d+)?)$", arg)
         if not sm:
             raise TransformError(f"bad scl argument: {arg!r}")
-        op, n = sm.group(1), float(sm.group(2))
-        n = int(n) if n == int(n) else n
-        if op == "+":
-            return col + F.lit(n), None
-        if op == "-":
-            return col - F.lit(n), None
-        if op == "*":
-            return col * F.lit(n), None
-        return col / F.lit(n), None
+        return f"({expr} {sm.group(1)} {sm.group(2)})", None
     if name == "skp":
-        return col, col != F.lit(_literal(arg))
+        return expr, f"{expr} <> {_literal(arg)}"
     if name == "substit":
         a, b = _two_args(arg)
-        return F.when(col == F.lit(a), F.lit(b)).otherwise(col), None
+        return f"CASE WHEN {expr} = {a} THEN {b} ELSE {expr} END", None
     if name == "replc":
         a, b = _two_args(arg)
-        return F.regexp_replace(col.cast("string"), re.escape(a), b), None
+        return f"REPLACE(CAST({expr} AS STRING), {a}, {b})", None
     if name == "prefix":
-        return F.concat(F.lit(_literal(arg)), col.cast("string")), None
+        return f"CONCAT({_literal(arg, force_str=True)}, CAST({expr} AS STRING))", None
     if name == "postfix":
-        return F.concat(col.cast("string"), F.lit(_literal(arg))), None
+        return f"CONCAT(CAST({expr} AS STRING), {_literal(arg, force_str=True)})", None
     raise TransformError(f"unknown transformation {name!r}")
 
 
-def apply_transform_chain(
-    col: Column, fns: tuple[str, ...] | list[str]
-) -> tuple[Column, list[Column]]:
-    """Apply a dotted chain of DSL functions; collects row-filters."""
-    filters: list[Column] = []
+def transform_chain_sql(
+    expr: str, fns: tuple[str, ...] | list[str]
+) -> tuple[str, list[str]]:
+    """Apply a dotted chain of DSL functions; collects row filters."""
+    filters: list[str] = []
     for fn in fns:
-        col, flt = transform_column(col, fn)
+        expr, flt = transform_sql(expr, fn)
         if flt is not None:
             filters.append(flt)
-    return col, filters
+    return expr, filters
 
 
-def _literal(arg: str):
-    arg = arg.strip().strip('"')
-    try:
-        return int(arg)
-    except ValueError:
+def _literal(raw: str, force_str: bool = False) -> str:
+    """A DSL argument as a SQL literal: numbers stay bare, anything else
+    (or everything, with ``force_str``) becomes a quoted string."""
+    raw = raw.strip().strip('"')
+    if not force_str:
         try:
-            return float(arg)
+            float(raw)
+            return raw
         except ValueError:
-            return arg
+            pass
+    return "'" + raw.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
-def _two_args(arg: str):
+def _two_args(arg: str) -> tuple[str, str]:
     parts = [p.strip() for p in arg.split(",")]
     if len(parts) != 2:
         raise TransformError(f"expected two arguments, got: {arg!r}")

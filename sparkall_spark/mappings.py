@@ -62,7 +62,7 @@ class MappingIndex:
     def relevant_sources(self, star: Star) -> list[EntityMapping]:
         """All mappings covering every predicate of the star.
 
-        Multiple relevant sources for one star are legal — the executor
+        Multiple relevant sources for one star are legal — the lowering
         unions them (reference: SparkExecutor.scala:113-117).
         """
         return [m for m in self.mappings if m.covers(star)]
@@ -400,7 +400,7 @@ def expand_negated_paths(query_text: str, index: "MappingIndex") -> str:
     the closed mapping model the candidate set is exactly the entity's
     mapped (non-rdf:type) predicates, so negation desugars to the
     alternation of the complement — and from there the ordinary path
-    machinery (UNION-branch expansion) takes over, both backends
+    machinery (UNION-branch expansion) takes over, the lowering
     unchanged.
 
     Fragment restrictions (loud errors, not silent misses): the subject

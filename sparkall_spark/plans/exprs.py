@@ -12,18 +12,17 @@ Grammar (recursive descent, precedence climbing):
 
 Functions: CONCAT, ROUND, ABS, UCASE, LCASE, STRLEN, COALESCE, IF,
 FLOOR, CEIL, TRIM, SUBSTR, REPLACE, CONTAINS, STRSTARTS, STRENDS,
-BOUND — each chosen because the Spark Column rendering and the
-ANSI-SQL rendering (DuckDB oracle / federated target) are semantically
+BOUND — each chosen because the Spark SQL rendering and the ANSI-SQL
+rendering (DuckDB oracle / federated target) are semantically
 identical builtins on both engines (STRSTARTS/STRENDS render as
 substring-equality so the SQL is portable).  ``BOUND(?v)`` maps to an
 IS NOT NULL probe — in the mapped-relational model an optional
 variable is bound iff its left-join column is non-null, which also
 treats a source NULL as unbound (documented approximation).
 
-One AST, two compilers: :func:`to_column` builds the Spark Column
-(JVM-side, whole-stage codegen — BIND never introduces a UDF) and
-:func:`to_sql` renders the same expression as an ANSI SQL string for
-the deferred-SQL backend.
+:func:`to_sql` renders an expression as an ANSI SQL string for the
+SQL lowering (plans/sqlgen.py); Catalyst compiles it JVM-side with
+whole-stage codegen, so BIND never introduces a UDF.
 """
 
 from __future__ import annotations
@@ -31,7 +30,6 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import Column, functions as F
 
 
 class ExprParseError(ValueError):
@@ -68,39 +66,39 @@ class ENot:
 
 # SPARQL fn -> (pyspark builder, sql renderer); arity checked at parse
 _FUNCTIONS = {
-    "concat": (lambda *a: F.concat(*a), "concat"),
-    "round": (lambda x, n=None: F.round(x, 0 if n is None else n), "round"),
-    "abs": (F.abs, "abs"),
-    "ucase": (F.upper, "upper"),
-    "lcase": (F.lower, "lower"),
-    "strlen": (F.length, "length"),
-    "coalesce": (lambda *a: F.coalesce(*a), "coalesce"),
-    "floor": (F.floor, "floor"),
-    "ceil": (F.ceil, "ceil"),
-    "trim": (F.trim, "trim"),
+    "concat": "concat",
+    "round": "round",
+    "abs": "abs",
+    "ucase": "upper",
+    "lcase": "lower",
+    "strlen": "length",
+    "coalesce": "coalesce",
+    "floor": "floor",
+    "ceil": "ceil",
+    "trim": "trim",
     # SPARQL 1.1 datetime accessors — identical builtins on Spark SQL
     # and DuckDB over date/timestamp values
-    "year": (F.year, "year"),
-    "month": (F.month, "month"),
-    "day": (F.day, "day"),
-    "hours": (F.hour, "hour"),
-    "minutes": (F.minute, "minute"),
-    "seconds": (F.second, "second"),
-    "replace": (lambda s, a, b: F.replace(s, a, b), "replace"),
-    "contains": (lambda s, sub: s.contains(sub), "contains"),
-    # special-cased in both compilers:
-    "if": (None, None),        # CASE WHEN
-    "substr": (None, None),    # int-literal pos/len
-    "strstarts": (None, None), # substring-equality rendering
-    "strends": (None, None),
-    "bound": (None, None),     # IS NOT NULL on a variable
-    "strbefore": (None, None), # position() + substring rendering
-    "strafter": (None, None),
+    "year": "year",
+    "month": "month",
+    "day": "day",
+    "hours": "hour",
+    "minutes": "minute",
+    "seconds": "second",
+    "replace": "replace",
+    "contains": "contains",
+    # special-cased in to_sql:
+    "if": None,        # CASE WHEN
+    "substr": None,    # int-literal pos/len
+    "strstarts": None, # substring-equality rendering
+    "strends": None,
+    "bound": None,     # IS NOT NULL on a variable
+    "strbefore": None, # position() + substring rendering
+    "strafter": None,
     # SPARQL 1.1 §17.4.2.5 STR and §17.4.4 hash functions: arguments
-    # are stringified first so both compilers hash the lexical form
-    "str": (None, None),
-    "md5": (None, None),
-    "sha256": (None, None),
+    # are stringified first so both engines hash the lexical form
+    "str": None,
+    "md5": None,
+    "sha256": None,
 }
 # EFun("in", (needle, *haystack)) is built by the infix IN parse only —
 # deliberately NOT in _FUNCTIONS, so call-syntax `in(..)` stays rejected.
@@ -240,6 +238,10 @@ class _Parser:
                 if len(args) not in (2, 3):
                     raise ExprParseError("SUBSTR takes (str, pos[, len])")
                 _substr_args(EFun(fn, tuple(args)))  # literal pos/len
+            if fn == "round" and len(args) == 2 and not (
+                isinstance(args[1], ELit) and isinstance(args[1].value, int)
+            ):
+                raise ExprParseError("ROUND scale must be an integer literal")
             return EFun(fn, tuple(args))
         raise ExprParseError(f"unexpected token {val!r}")
 
@@ -299,8 +301,8 @@ def is_boolean_expr(node) -> bool:
 
 
 def _substr_args(node) -> tuple[int, int | None]:
-    """SUBSTR pos/len must be positive integer literals (the Column API
-    takes Python ints; SPARQL substr is 1-based like SQL)."""
+    """SUBSTR pos/len must be positive integer literals (SPARQL substr
+    is 1-based like SQL)."""
     pos = node.args[1]
     if not (isinstance(pos, ELit) and isinstance(pos.value, int) and pos.value >= 1):
         raise ExprParseError("SUBSTR position must be an integer literal >= 1")
@@ -312,83 +314,6 @@ def _substr_args(node) -> tuple[int, int | None]:
     return pos.value, None
 
 
-def to_column(node, resolve) -> Column:
-    """Compile to a Spark Column; ``resolve(var_name) -> Column``."""
-    if isinstance(node, EVar):
-        return resolve(node.name)
-    if isinstance(node, ELit):
-        return F.lit(node.value)
-    if isinstance(node, EBin):
-        l, r = to_column(node.left, resolve), to_column(node.right, resolve)
-        return {
-            "+": lambda: l + r, "-": lambda: l - r,
-            "*": lambda: l * r, "/": lambda: l / r,
-            "=": lambda: l == r, "!=": lambda: l != r,
-            "<": lambda: l < r, "<=": lambda: l <= r,
-            ">": lambda: l > r, ">=": lambda: l >= r,
-        }[node.op]()
-    if isinstance(node, ENot):
-        return ~to_column(node.arg, resolve)
-    if isinstance(node, EFun):
-        if node.fn == "if":
-            if len(node.args) != 3:
-                raise ExprParseError("IF takes exactly (cond, then, else)")
-            c, t, e = (to_column(a, resolve) for a in node.args)
-            return F.when(c, t).otherwise(e)
-        if node.fn == "bound":
-            return to_column(node.args[0], resolve).isNotNull()
-        if node.fn == "strstarts":
-            s, p = (to_column(a, resolve) for a in node.args)
-            return s.startswith(p)
-        if node.fn == "strends":
-            s, p = (to_column(a, resolve) for a in node.args)
-            return s.endswith(p)
-        if node.fn in ("strbefore", "strafter"):
-            # SPARQL 1.1 §17.4.3.9-10: '' when the separator is absent;
-            # empty separator -> '' (before) / the whole string (after).
-            s, sep = (to_column(a, resolve) for a in node.args)
-            pos = F.position(sep, s)
-            if node.fn == "strbefore":
-                hit = F.substring(s, F.lit(1), pos - 1)
-            else:
-                hit = F.substring(s, pos + F.length(sep), F.length(s))
-            return F.when(pos > 0, hit).otherwise(F.lit(""))
-        if node.fn in ("str", "md5", "sha256"):
-            c = to_column(node.args[0], resolve).cast("string")
-            if node.fn == "md5":
-                return F.md5(c.cast("binary"))
-            if node.fn == "sha256":
-                return F.sha2(c.cast("binary"), 256)
-            return c
-        if node.fn == "in":
-            needle = to_column(node.args[0], resolve)
-            items = node.args[1:]
-            if all(isinstance(a, ELit) for a in items):
-                # literal list -> Catalyst In predicate (pushdown-able)
-                return needle.isin([a.value for a in items])
-            cond = needle == to_column(items[0], resolve)
-            for a in items[1:]:
-                cond = cond | (needle == to_column(a, resolve))
-            return cond
-        if node.fn == "substr":
-            pos, ln = _substr_args(node)
-            s = to_column(node.args[0], resolve)
-            return F.substring(s, pos, 2_000_000_000 if ln is None else ln)
-        if node.fn == "round":
-            # F.round takes a Python int scale, not a Column
-            scale = 0
-            if len(node.args) == 2:
-                if not isinstance(node.args[1], ELit) or not isinstance(
-                    node.args[1].value, int
-                ):
-                    raise ExprParseError("ROUND scale must be an integer literal")
-                scale = node.args[1].value
-            return F.round(to_column(node.args[0], resolve), scale)
-        args = [to_column(a, resolve) for a in node.args]
-        return _FUNCTIONS[node.fn][0](*args)
-    raise ExprParseError(f"bad AST node {node!r}")
-
-
 def to_sql(node, resolve) -> str:
     """Render as ANSI SQL; ``resolve(var_name) -> str`` (a column ref)."""
     if isinstance(node, EVar):
@@ -396,9 +321,8 @@ def to_sql(node, resolve) -> str:
     if isinstance(node, ELit):
         if isinstance(node.value, str):
             # Spark SQL's default parser treats backslash as an escape
-            # inside string literals (unlike F.lit), so double it first
-            # or the SQL backend would diverge from the Column backend
-            # on literals containing backslashes.
+            # inside string literals, so double it first or a literal
+            # containing a backslash would lose it.
             escaped = node.value.replace("\\", "\\\\").replace("'", "''")
             return "'" + escaped + "'"
         return str(node.value)
@@ -456,5 +380,5 @@ def to_sql(node, resolve) -> str:
                 else f"substring({s}, {pos}, {ln})"
             )
         args = ", ".join(to_sql(a, resolve) for a in node.args)
-        return f"{_FUNCTIONS[node.fn][1]}({args})"
+        return f"{_FUNCTIONS[node.fn]}({args})"
     raise ExprParseError(f"bad AST node {node!r}")

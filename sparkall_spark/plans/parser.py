@@ -306,7 +306,7 @@ _PATH_VAR_COUNTER = itertools.count()
 #
 # `(a|b)`, `p+`, `p*` and the explicit-bounds extension `p{m,n}` expand
 # TEXTUALLY into UNION branch bodies before union splitting, so every
-# downstream stage (stars, planner, executor, SQL backend) sees plain
+# downstream stage (stars, planner, SQL lowering) sees plain
 # BGPs and the existing sequence/inverse machinery.  `+`/`*` are
 # BOUNDED: bare quantifiers expand to depth _PATH_DEFAULT_CAP (an
 # engine-declared cap — unbounded closure over a mapped relational lake
@@ -636,7 +636,7 @@ def _parse_triples(
 
             # property paths (extension): sequence a/b and inverse ^a
             # desugar into fresh-variable chains — BGP-only rewriting,
-            # so every downstream stage (stars, planner, both backends)
+            # so every downstream stage (stars, planner, lowering)
             # sees ordinary triples
             if ("/" in pred_tok and not pred_tok.startswith("<")) or (
                 "/" in pred_tok and pred_tok.count("<") > 1
@@ -905,7 +905,7 @@ def parse_sparql(query: str) -> ParsedQuery:
         # CONSTRUCT { template } WHERE { ... }: the template's variables
         # become the select list, so the whole WHERE pipeline (stars,
         # joins, filters, modifiers) is reused unchanged; the triple
-        # materialization happens as a final stage in both backends.
+        # materialization happens as a final stage of the lowering.
         tb = query.find("{", con_m.end())
         if tb < 0:
             raise SparqlParseError("no '{' after CONSTRUCT")
@@ -1040,7 +1040,7 @@ def parse_sparql(query: str) -> ParsedQuery:
     # output projection keeps only group keys + aggregate/post-agg
     # aliases, so the alias would silently vanish.  Route expressions
     # over group keys through post_agg_exprs (group-key columns survive
-    # aggregation under their plain names in both backends); anything
+    # aggregation under their plain names); anything
     # referencing a non-grouped variable is an error, not a silent drop.
     if aggregations or group_by:
         gset = set(group_by)
@@ -1541,7 +1541,7 @@ def _parse_group(
 ]:
     """Parse one group graph pattern: triples + FILTERs + OPTIONAL blocks
     (including nested OPTIONAL).  Each OPTIONAL block that introduces
-    new stars becomes a model.OptionalBlock join unit — the executor
+    new stars becomes a model.OptionalBlock join unit — the lowering
     inner-joins a unit's stars, attaches child units with LEFT JOINs,
     and left-joins the assembled unit onto its enclosing scope (see
     _OptBlock for the source-level structure)."""

@@ -1,14 +1,23 @@
-"""Deferred-SQL backend: compile a whole query to ONE SQL string.
+"""The SPARQL lowering: compile a whole query to ONE SQL string.
 
 This is the Spark-first re-expression of the reference's second
 executor (PrestoExecutor + DataQueryFrame, a deferred-SQL IR that
 accumulates selects/filters/joins and renders one federated SQL string,
 reference: model/DataQueryFrame.scala:5-15, PrestoExecutor.scala:404-518).
-Instead of shipping the string to Presto over JDBC, we register each
-star's source as a temp view and hand the single statement to
-``spark.sql`` — Catalyst sees exactly the same logical plan as the
-DataFrame backend, so both backends must agree bit-for-bit (asserted in
-tests/test_sqlgen.py).
+Instead of shipping the string to Presto over JDBC, each star's source
+is bound as a temp view and the single statement goes to ``spark.sql``:
+Catalyst analyses the whole query once, where building the same plan
+from DataFrame ops would analyse every op eagerly.  The reference's
+Spark executor (SparkExecutor.scala) builds the same pipeline from
+DataFrame ops; the statement keeps its order of operations:
+
+- per star: scan -> project/alias (only the needed columns) -> mapping
+  and TRANSFORM chains -> filters -> UNION ALL of the relevant sources;
+- joins: the reference's pending-queue chaining of equi-joins, so any
+  connected join-graph order works; OPTIONAL blocks join as units;
+- after the joins: subqueries, VALUES, MINUS/EXISTS, BIND, then
+  GROUP BY/HAVING or DISTINCT, ORDER BY (one multi-key clause — the
+  reference's per-key loop is last-key-wins, Run.scala:294-299), LIMIT.
 
 The generated SQL is deliberately ANSI-flavored: per-star derived
 tables with stable aliases, explicit JOIN ... ON chains, WHERE /
@@ -19,11 +28,11 @@ federation.
 
 from __future__ import annotations
 
-import re
 import uuid
+from collections import deque
 from dataclasses import dataclass
 
-from sparkall_spark.functions.transforms import TransformError, _FN_RE
+from sparkall_spark.functions.transforms import transform_chain_sql
 from sparkall_spark.plans.exprs import to_sql
 from sparkall_spark.mappings import EntityMapping, MappingIndex
 from sparkall_spark.plans.model import Filter, ParsedQuery
@@ -31,6 +40,10 @@ from sparkall_spark.plans.planner import QueryPlan, plan_query
 from sparkall_spark.sources import SourceCache
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+
+
+class ExecutionError(RuntimeError):
+    """A parsed query outside the fragment the lowering supports."""
 
 
 @dataclass
@@ -89,67 +102,13 @@ def _filter_sql(col: str, f: Filter) -> str:
     return f"{col} {op} {_lit(f.value, f.value_is_string)}"
 
 
-def _transform_sql(expr: str, fn: str) -> tuple[str, str | None]:
-    """Render one TRANSFORM DSL function to SQL; returns (expr, filter)."""
-    m = _FN_RE.match(fn.strip())
-    if not m:
-        raise TransformError(f"bad transformation: {fn!r}")
-    name, arg = m.group(1), (m.group(2) or "").strip()
-    if name == "toInt":
-        return f"TRY_CAST({expr} AS INT)", None
-    if name == "toLong":
-        return f"TRY_CAST({expr} AS BIGINT)", None
-    if name == "toDouble":
-        return f"TRY_CAST({expr} AS DOUBLE)", None
-    if name == "toStr":
-        return f"CAST({expr} AS STRING)", None
-    if name == "scl":
-        sm = re.match(r"^_?\s*([+\-*/])\s*(-?\d+(?:\.\d+)?)$", arg)
-        if not sm:
-            raise TransformError(f"bad scl argument: {arg!r}")
-        return f"({expr} {sm.group(1)} {sm.group(2)})", None
-    if name == "skp":
-        # marker: the caller renders the row filter against the OUTPUT
-        # alias (the wrapper's WHERE can't see source attrs); equivalent
-        # to the DataFrame path whenever skp is the last/only step
-        return expr, f"<> {_lit_auto(arg)}"
-    if name == "substit":
-        a, b = [x.strip() for x in arg.split(",")]
-        return (
-            f"CASE WHEN {expr} = {_lit_auto(a)} THEN {_lit_auto(b)} ELSE {expr} END",
-            None,
-        )
-    if name == "replc":
-        a, b = [x.strip() for x in arg.split(",")]
-        return f"REPLACE(CAST({expr} AS STRING), {_lit_auto(a)}, {_lit_auto(b)})", None
-    if name == "prefix":
-        return f"CONCAT({_lit_auto(arg, force_str=True)}, CAST({expr} AS STRING))", None
-    if name == "postfix":
-        return f"CONCAT(CAST({expr} AS STRING), {_lit_auto(arg, force_str=True)})", None
-    raise TransformError(f"unknown transformation {name!r}")
-
-
-def _lit_auto(raw: str, force_str: bool = False) -> str:
-    raw = raw.strip().strip('"')
-    if not force_str:
-        try:
-            int(raw)
-            return raw
-        except ValueError:
-            try:
-                float(raw)
-                return raw
-            except ValueError:
-                pass
-    return "'" + raw.replace("\\", "\\\\").replace("'", "''") + "'"
-
-
 def _attach_subqueries_sql(
     q: ParsedQuery, core: str, index: MappingIndex, views: _Views
 ) -> str:
-    """SQL twin of executor._attach_subqueries: join each { SELECT ... }
-    subquery (compiled recursively to its own single-SQL form) on its
-    shared projected variables."""
+    """Join each { SELECT ... } subquery (compiled recursively to its
+    own single-SQL form) on its shared projected variables (SPARQL 1.1
+    §12: a subquery evaluates independently, then joins the enclosing
+    group).  Subquery-only output vars surface under their plain names."""
     for i, sub in enumerate(q.subqueries):
         sub_c = _compile(plan_query(sub), index, views)
         shared = [
@@ -158,9 +117,10 @@ def _attach_subqueries_sql(
             if v in q.stars or v in q.var_to_star_pred
         ]
         if not shared:
-            raise ValueError(
+            raise ExecutionError(
                 "subquery must share at least one projected variable "
-                "with the outer pattern"
+                "with the outer pattern (cartesian subqueries are not "
+                "supported)"
             )
         on = " AND ".join(
             f"{_q(q.column_for_var(v))} = sq{i}.{_q(v)}" for v in shared
@@ -175,9 +135,10 @@ def _attach_subqueries_sql(
 
 
 def _apply_values_sql(q: ParsedQuery, core: str) -> str:
-    """SQL twin of executor._apply_values: join the inline VALUES table
-    (Spark SQL: FROM VALUES (..),(..) AS t(cols)); UNDEF -> NULL with a
-    null-or-equal condition, all-UNDEF columns pruned."""
+    """Multi-variable VALUES: join the inline solution table (Spark SQL:
+    FROM VALUES (..),(..) AS t(cols)) on its variables.  UNDEF rows
+    (SPARQL 1.1 §10.2.2) carry NULL and a null-or-equal condition; an
+    all-UNDEF column constrains nothing and is pruned."""
     for i, (all_vars, rows) in enumerate(q.values_tables):
         keep = [
             j for j, v in enumerate(all_vars)
@@ -216,17 +177,45 @@ def _apply_values_sql(q: ParsedQuery, core: str) -> str:
 
 
 def _star_sql_resolver(q: ParsedQuery, star_name: str):
-    """SQL twin of executor._star_var_resolver: resolve a variable to
-    its column WITHIN one star's subquery."""
+    """Resolve a variable to its column WITHIN one star's subquery — a
+    join variable (object here, subject elsewhere) must resolve to this
+    star's join-attribute column, not the other star's ID."""
 
     def resolve(v: str) -> str:
         if v == star_name:
             return _q(f"{star_name}_ID")
         if v in q.var_to_star_pred and q.var_to_star_pred[v][0] == star_name:
             return _q(q.column_for(*q.var_to_star_pred[v]))
-        raise ValueError(f"variable ?{v} does not belong to star ?{star_name}")
+        raise ExecutionError(f"variable ?{v} does not belong to star ?{star_name}")
 
     return resolve
+
+
+def _transform_chains(q: ParsedQuery, plan: QueryPlan) -> dict[str, list[str]]:
+    """Inline TRANSFORM chains by target column (SparkExecutor.scala:
+    127-141): side l rewrites the left star's join-attribute column,
+    side r the right star's ID column."""
+    chains: dict[str, list[str]] = {}
+    for spec in q.transforms:
+        edge = next(
+            (
+                e
+                for e in plan.join_edges
+                if e.left_star == spec.left_var and e.right_star == spec.right_var
+            ),
+            None,
+        )
+        if edge is None:
+            raise ExecutionError(
+                f"TRANSFORM references no join ?{spec.left_var}->?{spec.right_var}"
+            )
+        col = (
+            q.column_for(edge.left_star, edge.pred)
+            if spec.side == "l"
+            else f"{spec.right_var}_ID"
+        )
+        chains.setdefault(col, []).extend(spec.functions)
+    return chains
 
 
 def _star_subquery(
@@ -235,28 +224,16 @@ def _star_subquery(
     star_name: str,
     sources: list[EntityMapping],
     views: _Views,
+    chains: dict[str, list[str]],
 ) -> str:
+    """Scan + project/alias + UNION ALL of the relevant sources for one
+    star, then its pre-join filters (SparkExecutor.scala:26-185)."""
     star = q.stars[star_name]
     if not sources:
-        raise ValueError(f"no relevant source for star ?{star_name}")
-
-    # transforms targeting this star: side l -> edge join column,
-    # side r -> the ID column
-    col_transforms: dict[str, list[str]] = {}
-    row_filters: list[str] = []
-    for spec in q.transforms:
-        if spec.side == "l" and spec.left_var == star_name:
-            edge = next(
-                e
-                for e in plan.join_edges
-                if e.left_star == spec.left_var and e.right_star == spec.right_var
-            )
-            col_transforms.setdefault(
-                q.column_for(star_name, edge.pred), []
-            ).extend(spec.functions)
-        elif spec.side == "r" and spec.right_var == star_name:
-            col_transforms.setdefault(f"{star_name}_ID", []).extend(spec.functions)
-
+        raise ExecutionError(
+            f"no relevant source for star ?{star_name} "
+            f"(predicates {sorted(star.predicates)}, class {star.class_iri})"
+        )
     selects = []
     for m_idx, m in enumerate(sources):
         view = views.bind(
@@ -264,30 +241,21 @@ def _star_subquery(
             m,
         )
         cols = []
-        branch_filters: list[str] = []  # this source's mapping-declared filters
+        row_filters: list[str] = []
         for out_col, attr, pred in [(f"{star_name}_ID", m.id_attr, None)] + [
             (q.column_for(star_name, p), m.predicates[p], p)
             for p in sorted(plan.needed_preds[star_name])
         ]:
-            expr = _q(attr)
-            # mapping-declared (RML FnO) transforms are per-source: their
-            # row filters (skp) must apply inside THIS branch's SELECT,
-            # matching the DataFrame backend's per-source raw.filter
-            # (executor.py); inline TRANSFORM clauses are identical
-            # across sources, so their filter is emitted once at the
-            # union level (m_idx == 0)
-            for fn in m.transforms.get(pred, ()) if pred else ():
-                expr, flt = _transform_sql(expr, fn)
-                if flt:
-                    branch_filters.append(f"{expr} {flt}")
-            for fn in col_transforms.get(out_col, []):
-                expr, flt = _transform_sql(expr, fn)
-                if flt and m_idx == 0:  # one filter per column, not per source
-                    row_filters.append(f"{_q(out_col)} {flt}")
+            # the mapping-declared (RML FnO) chain applies at the scan,
+            # then the query's TRANSFORM chain; each skp drops this
+            # source's rows on the value at its own position in the chain
+            expr, flts = transform_chain_sql(_q(attr), m.transforms.get(pred, ()))
+            expr, more = transform_chain_sql(expr, chains.get(out_col, ()))
+            row_filters += flts + more
             cols.append(f"{expr} AS {_q(out_col)}")
         sel = f"SELECT {', '.join(cols)} FROM {_q(view)}"
-        if branch_filters:
-            sel += " WHERE " + " AND ".join(branch_filters)
+        if row_filters:
+            sel += " WHERE " + " AND ".join(row_filters)
         selects.append(sel)
     body = "\nUNION ALL\n".join(selects)
 
@@ -302,90 +270,88 @@ def _star_subquery(
         elif (
             f.var in q.var_to_star_pred and q.var_to_star_pred[f.var][0] == star_name
         ):
-            # join variables resolve via (star, pred) — see executor.py
-            # _apply_star_filters for the BSBM Q7/Q8 rationale
+            # Resolve via (star, pred), NOT column_for_var: a join
+            # variable (object of this star AND subject of another) must
+            # filter this star's join-attribute column, not the other
+            # star's ID column (SparkExecutor.scala:144-185; BSBM Q7/Q8)
             conds.append(_filter_sql(_q(q.column_for(*q.var_to_star_pred[f.var])), f))
     for ef in q.expr_filters:
         if ef.star == star_name:
             # OPTIONAL-internal expression filter: pre-join on this star
             conds.append(to_sql(ef.expr, _star_sql_resolver(q, star_name)))
-    all_conds = conds + row_filters
     # wrap once so every condition references output aliases (Catalyst
     # pushes the predicates back into the scan regardless)
     sub = f"SELECT * FROM (\n{body}\n) AS s_{star_name}"
-    if all_conds:
-        sub += " WHERE " + " AND ".join(all_conds)
+    if conds:
+        sub += " WHERE " + " AND ".join(conds)
     return f"({sub})"
 
 
-def _apply_construct_sql(q: ParsedQuery, sql: str) -> str:
-    """CONSTRUCT materialization, SQL rendering: explode an ARRAY of
-    named_structs over the solution query, so the WHERE executes ONCE
-    (Spark inlines CTEs — a UNION ALL of per-triple selects would
-    re-run the solution plan k times).  Mirrors
-    executor._apply_construct."""
-    if not q.construct_template:
-        return sql
-    structs: list[str] = []
-    for trip in q.construct_template:
-        fields: list[str] = []
-        for term, out in zip(trip, ("subject", "predicate", "object")):
-            kind, val = term
-            expr = (
-                f"CAST({_q(val)} AS STRING)"
-                if kind == "var"
-                else _lit(str(val), True)
-            )
-            fields.append(f"'{out}', {expr}")
-        structs.append(f"named_struct({', '.join(fields)})")
-    arr = ",\n  ".join(structs)
+def _explode_triples_sql(triples: list[tuple[str, str, str]], source: str) -> str:
+    """(subject, predicate, object) rows from ONE pass over ``source``:
+    explode an ARRAY of named_structs, one per triple, and drop triples
+    with a NULL term.  A UNION ALL of per-triple selects would read
+    ``source`` once per triple (Spark inlines CTEs and does not share
+    work across union branches)."""
+    structs = ",\n  ".join(
+        f"named_struct('subject', {s}, 'predicate', {p}, 'object', {o})"
+        for s, p, o in triples
+    )
     return (
-        f"SELECT DISTINCT t.`subject`, t.`predicate`, t.`object` FROM (\n"
-        f"SELECT explode(array(\n  {arr}\n)) AS t FROM ({sql}) AS sol\n"
+        f"SELECT t.`subject`, t.`predicate`, t.`object` FROM (\n"
+        f"SELECT explode(array(\n  {structs}\n)) AS t FROM {source}\n"
         f") AS graph\n"
         f"WHERE t.`subject` IS NOT NULL AND t.`predicate` IS NOT NULL "
         f"AND t.`object` IS NOT NULL"
     )
 
 
+def _apply_construct_sql(q: ParsedQuery, sql: str) -> str:
+    """CONSTRUCT materialization: one (subject, predicate, object)
+    string row per template triple per solution, the WHERE executing
+    ONCE.  Solutions with an unbound template variable emit no triple
+    for that pattern (SPARQL 1.1 §16.2), and the result deduplicates —
+    an RDF graph is a set."""
+    if not q.construct_template:
+        return sql
+    triples = [
+        tuple(
+            f"CAST({_q(val)} AS STRING)" if kind == "var" else _lit(str(val), True)
+            for kind, val in trip
+        )
+        for trip in q.construct_template
+    ]
+    graph = _explode_triples_sql(triples, f"({sql}) AS sol")
+    return f"SELECT DISTINCT * FROM (\n{graph}\n) AS g"
+
+
 def _apply_describe_sql(
     plan: QueryPlan, index: MappingIndex, views: _Views, sql: str,
 ) -> str:
-    """DESCRIBE, SQL rendering: solution query -> CTE `sol`; one SELECT
-    per (source, predicate) filtered by `id IN (SELECT var FROM sol)`,
-    plus the rdf:type triple, UNION ALL + DISTINCT.  More scans than
-    the DataFrame backend's unpivot, but this backend's contract is a
-    single portable SQL statement; Catalyst's CSE still collapses the
-    repeated view reads."""
+    """DESCRIBE materialization: solution query -> CTE `sol`; each
+    relevant source of a described variable is read ONCE, restricted to
+    the solution ids, and ALL its mapped predicates (plus the rdf:type
+    triple) explode into (subject, predicate, object) strings.  Mapping
+    transforms apply exactly as in the star scan: a skp drops the
+    source row."""
     q = plan.query
     if not q.describe_vars:
         return sql
     parts: list[str] = []
     for v in q.describe_vars:
-        star = q.stars[v]
-        for mi, m in enumerate(index.relevant_sources(star)):
+        for mi, m in enumerate(index.relevant_sources(q.stars[v])):
             view = views.bind(f"dsc_{m.name.lower()}_{mi}", m)
-            member = f"{_q(m.id_attr)} IN (SELECT {_q(v)} FROM sol)"
-            subj = f"CAST({_q(m.id_attr)} AS STRING) AS `subject`"
+            subj = f"CAST({_q(m.id_attr)} AS STRING)"
+            conds = [f"{_q(m.id_attr)} IN (SELECT {_q(v)} FROM sol)"]
+            triples = []
             for iri, attr in sorted(m.predicates.items()):
-                expr = _q(attr)
-                conds = [member]
-                for fn in m.transforms.get(iri, ()):
-                    expr, flt = _transform_sql(expr, fn)
-                    if flt:
-                        conds.append(f"{expr} {flt}")
-                conds.append(f"{expr} IS NOT NULL")
-                parts.append(
-                    f"SELECT {subj}, {_lit(iri, True)} AS `predicate`, "
-                    f"CAST({expr} AS STRING) AS `object` "
-                    f"FROM {_q(view)} WHERE {' AND '.join(conds)}"
-                )
+                expr, flts = transform_chain_sql(_q(attr), m.transforms.get(iri, ()))
+                conds += flts
+                triples.append((subj, _lit(iri, True), f"CAST({expr} AS STRING)"))
             if m.class_iri:
-                parts.append(
-                    f"SELECT {subj}, {_lit(RDF_TYPE, True)} AS `predicate`, "
-                    f"{_lit(m.class_iri, True)} AS `object` "
-                    f"FROM {_q(view)} WHERE {member}"
-                )
+                triples.append((subj, _lit(RDF_TYPE, True), _lit(m.class_iri, True)))
+            source = f"{_q(view)} WHERE {' AND '.join(conds)}"
+            parts.append(_explode_triples_sql(triples, source))
     body = "\nUNION ALL\n".join(f"({p})" for p in parts)
     return (
         f"WITH sol AS ({sql})\n"
@@ -400,6 +366,13 @@ def compile_sql(plan: QueryPlan, index: MappingIndex) -> CompiledSql:
 def _compile(plan: QueryPlan, index: MappingIndex, views: _Views) -> CompiledSql:
     q = plan.query
     if q.union_branches:
+        if not q.is_ask:
+            if q.aggregations or q.group_by or q.having:
+                raise ExecutionError(
+                    "UNION combined with aggregation is not supported"
+                )
+            if not {k.var for k in q.order_keys} <= set(q.select_vars):
+                raise ExecutionError("UNION ORDER BY keys must be projected")
         parts = []
         for b in [q] + q.union_branches:
             bplan = plan_query(b)
@@ -508,18 +481,7 @@ def _compile(plan: QueryPlan, index: MappingIndex, views: _Views) -> CompiledSql
                 for k in q.order_keys
             )
     else:
-        sel = ", ".join(
-            f"{_q(q.column_for_var(v))} AS {_q(v)}" for v in q.select_vars
-        )
-        sql = f"SELECT {'DISTINCT ' if q.distinct else ''}{sel} FROM {core}"
-        if q.order_keys:
-            # projected sort keys must use the output alias (required
-            # under DISTINCT; internal names are gone after projection)
-            sql += " ORDER BY " + ", ".join(
-                f"{_q(k.var if k.var in q.select_vars else q.column_for_var(k.var))}"
-                f"{' DESC' if k.descending else ''}"
-                for k in q.order_keys
-            )
+        sql = _project_sql(q, core)
     if q.limit is not None:
         sql += f" LIMIT {q.limit}"
     if q.offset is not None:
@@ -529,11 +491,54 @@ def _compile(plan: QueryPlan, index: MappingIndex, views: _Views) -> CompiledSql
     return CompiledSql(sql, views)
 
 
+def _project_sql(q: ParsedQuery, core: str) -> str:
+    """SELECT [DISTINCT] ... ORDER BY for a query without aggregation."""
+    sel = ", ".join(f"{_q(q.column_for_var(v))} AS {_q(v)}" for v in q.select_vars)
+
+    def keys(name) -> str:
+        return ", ".join(
+            f"{_q(name(k.var))}{' DESC' if k.descending else ''}"
+            for k in q.order_keys
+        )
+
+    if q.distinct and not {k.var for k in q.order_keys} <= set(q.select_vars):
+        # DISTINCT + ORDER BY on unprojected keys.  SPARQL algebra is
+        # OrderBy -> Project -> Distinct with Distinct preserving the
+        # order, so each distinct row takes the position of its FIRST
+        # occurrence in the ordered sequence.  Sorting before a SELECT
+        # DISTINCT loses that (the distinct re-shuffles).  Instead keep
+        # each projected group's minimal row under the full comparator
+        # (a window hash-partitioned by the projected columns, so no
+        # single-partition window), then sort once: ordering groups by
+        # their minimal row is first-occurrence order for any asc/desc
+        # mix, at the cost class of the ORDER BY's own global sort.
+        group = ", ".join(_q(q.column_for_var(v)) for v in q.select_vars)
+        okeys = ", ".join(
+            f"{_q(q.column_for_var(k.var))} AS {_q(f'__ok{i}')}"
+            for i, k in enumerate(q.order_keys)
+        )
+        pos = {k.var: f"__ok{i}" for i, k in enumerate(q.order_keys)}
+        return (
+            f"SELECT {', '.join(_q(v) for v in q.select_vars)} FROM ("
+            f"SELECT {sel}, {okeys}, ROW_NUMBER() OVER (PARTITION BY {group} "
+            f"ORDER BY {keys(q.column_for_var)}) AS `__sq_rn` FROM {core}"
+            f") AS first_seen WHERE `__sq_rn` = 1 ORDER BY {keys(pos.get)}"
+        )
+    sql = f"SELECT {'DISTINCT ' if q.distinct else ''}{sel} FROM {core}"
+    if q.order_keys:
+        # projected sort keys use the output alias (required under
+        # DISTINCT; internal names are gone after projection)
+        sql += " ORDER BY " + keys(
+            lambda v: v if v in q.select_vars else q.column_for_var(v)
+        )
+    return sql
+
+
 def _apply_binds_sql(q: ParsedQuery, core: str) -> str:
-    """Post-join layer mirroring executor._apply_binds: BIND computed
-    columns as nested projections (one per bind, so later binds may
-    reference earlier aliases), then the filters that can only run here
-    (bind-alias filters and var-to-var comparisons)."""
+    """Post-join layer: BIND computed columns as nested projections
+    (one per bind, so later binds may reference earlier aliases), then
+    the filters that can only run here (bind-alias filters, expression
+    FILTERs and var-to-var comparisons)."""
     for i, b in enumerate(q.binds):
         expr = to_sql(b.expr, lambda v: _q(q.column_for_var(v)))
         core = (
@@ -600,21 +605,41 @@ def _apply_minus_sql(
 def _core_sql(
     plan: QueryPlan, index: MappingIndex, views: _Views
 ) -> str:
-    """FROM clause: star subqueries chained with JOIN ... ON, OPTIONAL
-    blocks rendered as LEFT-joined UNIT subqueries (mirrors
-    executor._join_stars — a block's stars inner-join inside one
-    subquery, child blocks LEFT-join inside it, and the assembled unit
-    LEFT-joins the enclosing scope on all its connecting edges)."""
+    """FROM clause: star subqueries chained with JOIN ... ON
+    (SparkExecutor.scala:247-359), OPTIONAL blocks attached as JOIN
+    UNITS.
+
+    SPARQL left-join semantics are per block: a block containing
+    several stars either matches wholly or binds nothing.  Each
+    model.OptionalBlock therefore inner-joins its own stars inside one
+    subquery (applying its block-scoped var/expression filters), LEFT
+    joins its child blocks inside it, and the assembled unit LEFT joins
+    the enclosing scope on ALL of its connecting edges at once.  A flat
+    per-star left-join chain would partially bind a failed multi-star
+    block."""
     q = plan.query
+    if not q.stars:
+        raise ExecutionError(
+            "the WHERE group must contain at least one triple pattern "
+            "(a bare { SELECT ... } wrapper adds nothing — run the inner "
+            "query directly)"
+        )
+    chains = _transform_chains(q, plan)
     subs = {
-        name: _star_subquery(q, plan, name, index.relevant_sources(star), views)
+        name: _star_subquery(
+            q, plan, name, index.relevant_sources(star), views, chains
+        )
         for name, star in q.stars.items()
     }
     if not plan.join_edges:
+        if len(subs) > 1:
+            raise ExecutionError(
+                "disconnected join graph: stars "
+                f"{sorted(subs)} share no join variable (cartesian "
+                "products are not part of the supported fragment)"
+            )
         (only,) = subs
         return f"{subs[only]} AS {_q(only)}"
-
-    from collections import deque
 
     blocks = q.optional_blocks
     star_block = {s: b.idx for b in blocks for s in b.subjects}
@@ -631,6 +656,9 @@ def _core_sql(
         elif sl == sr:
             internal[sl].append(e)
         else:
+            # the LATER-declared block owns the edge: its condition may
+            # reference anything attached before it (its parent scope,
+            # the mandatory pattern, or an earlier sibling block)
             owner = sr if sl is None else sl if sr is None else max(sl, sr)
             connecting[owner].append(e)
 
@@ -674,7 +702,7 @@ def _core_sql(
                 )
                 seen = {e.left_star, e.right_star}
             elif e.left_star in seen and e.right_star in seen:
-                extra.append(econd(e))
+                extra.append(econd(e))  # cycle edge
             elif e.left_star in seen:
                 sql += (
                     f"\nJOIN {subs[e.right_star]} AS {_q(e.right_star)} "
@@ -691,15 +719,26 @@ def _core_sql(
                 pend.append(e)
                 stall += 1
                 if stall > len(pend):
-                    raise ValueError("disconnected join graph")
+                    raise ExecutionError(
+                        "disconnected join graph: stars "
+                        f"{sorted(set(names) - seen)} unreachable"
+                    )
                 continue
             stall = 0
         if set(names) - seen:
-            raise ValueError(
+            raise ExecutionError(
                 f"stars not joined (cartesian not supported): "
                 f"{sorted(set(names) - seen)}"
             )
         return sql, extra
+
+    def unit_stars(b) -> set:
+        """Stars a block's unit binds: its own and its descendants'."""
+        out = set(b.subjects)
+        for c in blocks:
+            if c.parent == b.idx:
+                out |= unit_stars(c)
+        return out
 
     def render_unit(b) -> str:
         chain, extra = inner_chain(sorted(b.subjects), internal[b.idx])
@@ -717,25 +756,40 @@ def _core_sql(
             + (f" WHERE {' AND '.join(conds)}" if conds else "")
             + f") AS u{b.idx}"
         )
+        scope = set(b.subjects)
         for c in blocks:
             if c.parent == b.idx:
                 core = (
                     f"(SELECT * FROM {core}"
-                    f"\nLEFT JOIN {render_unit(c)} ON {attach_cond(c)}"
+                    f"\nLEFT JOIN {render_unit(c)} ON {attach_cond(c, scope)}"
                     f") AS un{c.idx}"
                 )
+                scope |= unit_stars(c)
         return core
 
-    def attach_cond(b) -> str:
+    def attach_cond(b, scope: set) -> str:
+        """ON condition of block ``b``'s unit; ``scope`` holds the stars
+        whose columns the enclosing side can see."""
         if not connecting[b.idx]:
-            raise ValueError(
+            raise ExecutionError(
                 "OPTIONAL block "
                 f"{{{', '.join('?' + s for s in sorted(b.subjects))}}} "
-                "shares no join variable with its enclosing pattern"
+                "shares no join variable with its enclosing pattern "
+                "(cartesian products are not part of the supported fragment)"
             )
-        conds = [econd(e) for e in connecting[b.idx]]
-        # LeftJoin(Ω1, Ω2, expr): scope-spanning block FILTERs join the
-        # ON condition (mirrors executor._attach_unit)
+        conds = []
+        for e in connecting[b.idx]:
+            other = e.right_star if e.left_star in b.subjects else e.left_star
+            if other not in scope:
+                raise ExecutionError(
+                    f"OPTIONAL block star ?{other} is referenced from a "
+                    "scope that cannot see it (not a well-designed "
+                    "pattern)"
+                )
+            conds.append(econd(e))
+        # SPARQL LeftJoin(Ω1, Ω2, expr): block FILTERs referencing the
+        # enclosing scope join the ON condition — they decide whether
+        # the block matches, never whether the enclosing row survives
         for f in b.attach_var_filters:
             if f.value_is_var:
                 op = "<>" if f.op == "!=" else f.op
@@ -753,14 +807,17 @@ def _core_sql(
     if mandatory:
         sql, extra = inner_chain(sorted(mandatory), mand_edges)
         hint_names: list = list(mandatory)
+        scope = set(mandatory)
     else:
         # fully-optional pattern: the first unit is the base scope
         base, tops = tops[0], tops[1:]
         sql, extra = render_unit(base), []
         hint_names = []
+        scope = unit_stars(base)
 
     for b in tops:
-        sql += f"\nLEFT JOIN {render_unit(b)} ON {attach_cond(b)}"
+        sql += f"\nLEFT JOIN {render_unit(b)} ON {attach_cond(b, scope)}"
+        scope |= unit_stars(b)
 
     core = f"(SELECT {_hint(hint_names)}* FROM {sql}"
     if extra:

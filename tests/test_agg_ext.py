@@ -47,10 +47,11 @@ def test_group_concat_sample_match_oracle(engine, duck):
     )
 
 
-def test_group_concat_backends_agree(engine):
+def test_group_concat_backends_agree(engine, duck):
+    """Row-set check of the GROUP_CONCAT/SAMPLE query (no order)."""
     a = sorted(map(tuple, engine.sparql(_GC_QUERY).collect()))
-    b = sorted(map(tuple, engine.sparql(_GC_QUERY, backend="sql").collect()))
-    assert a == b and len(a) > 0
+    assert len(a) > 0
+    assert_matches_oracle(engine.sparql(_GC_QUERY), duck, _GC_ORACLE)
 
 
 def test_group_concat_distinct(engine, duck):
@@ -70,9 +71,6 @@ def test_group_concat_distinct(engine, duck):
     FROM lineitem GROUP BY l_returnflag ORDER BY flag
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle, check_order=True)
-    a = engine.sparql(q).collect()
-    b = engine.sparql(q, backend="sql").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
 def test_group_concat_default_separator(engine):
@@ -116,12 +114,6 @@ def test_aggregate_over_expression(engine, duck):
     FROM lineitem GROUP BY 1, 2 ORDER BY rf, ls
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle, check_order=True)
-    df_rows = sorted(map(tuple, engine.sparql(q).collect()))
-    sql_rows = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    for a, b in zip(df_rows, sql_rows):
-        assert a[:2] == b[:2]
-        for x, y in zip(a[2:], b[2:]):
-            assert x == pytest.approx(y)
 
 
 def test_aggregate_expression_validation():
@@ -142,7 +134,7 @@ def test_aggregate_expression_validation():
 def test_expression_over_aggregates(engine, duck):
     """(ROUND(SUM(expr), 2) AS ?alias) and aggregate arithmetic like
     SUM(?a)/COUNT(*): internal __aggN aggregations + post-agg
-    expression columns, both backends."""
+    expression columns."""
     q = (
         PREFIX_BLOCK
         + """
@@ -161,11 +153,6 @@ def test_expression_over_aggregates(engine, duck):
     FROM lineitem GROUP BY 1 ORDER BY rf
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle, check_order=True)
-    a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert [x[0] for x in a] == [x[0] for x in b]
-    for x, y in zip(a, b):
-        assert x[1] == pytest.approx(y[1]) and x[2] == pytest.approx(y[2])
 
 
 def test_having_on_post_agg_alias(engine, duck):
@@ -184,8 +171,7 @@ def test_having_on_post_agg_alias(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle, check_order=True)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) > 0
+    assert len(a) > 0
 
 
 def test_select_expression_without_aggregate(engine, duck):
@@ -199,15 +185,12 @@ def test_select_expression_without_aggregate(engine, duck):
     )
     oracle = "SELECT p_name AS name, p_size * 2 AS double_size FROM part"
     assert_matches_oracle(engine.sparql(q), duck, oracle)
-    a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b
 
 
 def test_select_expression_over_group_key(engine, duck):
     """A SELECT expression over a group key under GROUP BY must survive
     into the output (r4; advisor finding: it silently vanished).  Routed
-    through post_agg_exprs in both backends."""
+    through post_agg_exprs."""
     q = (
         PREFIX_BLOCK
         + """
@@ -223,8 +206,7 @@ def test_select_expression_over_group_key(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) > 0
+    assert len(a) > 0
 
 
 def test_select_expression_over_group_key_only_no_aggregate(engine, duck):
@@ -275,8 +257,7 @@ def test_group_by_expression(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle, check_order=True)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) > 1
+    assert len(a) > 1
 
 
 def test_group_by_mixed_var_and_expression(engine, duck):

@@ -1,8 +1,8 @@
 """BIND(expr AS ?var) — extension over the reference fragment.
 
 Covers: expression parsing, scope validation, post-join evaluation,
-filters on bound variables, aggregation over bound variables, and
-DataFrame/SQL backend agreement plus DuckDB oracles.
+filters on bound variables, aggregation over bound variables, all
+against DuckDB oracles.
 """
 
 import pytest
@@ -122,10 +122,11 @@ def test_bind_matches_oracle(engine, duck):
     assert_matches_oracle(engine.sparql(_BIND_QUERY), duck, _BIND_ORACLE)
 
 
-def test_bind_backends_agree(engine):
+def test_bind_backends_agree(engine, duck):
+    """Non-empty result, checked against the oracle."""
     a = sorted(map(tuple, engine.sparql(_BIND_QUERY).collect()))
-    b = sorted(map(tuple, engine.sparql(_BIND_QUERY, backend="sql").collect()))
-    assert a == b and len(a) > 0
+    assert len(a) > 0
+    assert_matches_oracle(engine.sparql(_BIND_QUERY), duck, _BIND_ORACLE)
 
 
 def test_bind_aggregation_over_alias(engine, duck):
@@ -144,11 +145,6 @@ def test_bind_aggregation_over_alias(engine, duck):
     FROM lineitem GROUP BY l_returnflag ORDER BY rf
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle, check_order=True)
-    sql_rows = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    df_rows = sorted(map(tuple, engine.sparql(q).collect()))
-    assert [r[0] for r in sql_rows] == [r[0] for r in df_rows]
-    for a, b in zip(sql_rows, df_rows):
-        assert a[1] == pytest.approx(b[1])
 
 
 def test_bind_chained_aliases_and_strings(engine, duck):
@@ -164,9 +160,6 @@ def test_bind_chained_aliases_and_strings(engine, duck):
     )
     oracle = "SELECT lower(n_name) || '-x' AS tag FROM nation ORDER BY tag"
     assert_matches_oracle(engine.sparql(q), duck, oracle, check_order=True)
-    a = [r[0] for r in engine.sparql(q).collect()]
-    b = [r[0] for r in engine.sparql(q, backend="sql").collect()]
-    assert a == b
 
 
 def test_bind_if_and_comparison(engine, duck):
@@ -188,8 +181,7 @@ def test_bind_if_and_comparison(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) > 0
+    assert len(a) > 0
 
     with pytest.raises(ExprParseError):
         parse_expr("IF(?a > 1, 2)")  # wrong arity
@@ -202,7 +194,7 @@ def test_bind_if_and_comparison(engine, duck):
 
 def test_expression_filters(engine, duck):
     """FILTER over full expressions (extension): function calls and
-    arithmetic on either side of the comparison, both backends."""
+    arithmetic on either side of the comparison."""
     q = (
         PREFIX_BLOCK
         + """
@@ -214,9 +206,6 @@ def test_expression_filters(engine, duck):
     )
     oracle = "SELECT p_name AS name FROM part WHERE length(p_name) > 10"
     assert_matches_oracle(engine.sparql(q), duck, oracle)
-    assert sorted(map(tuple, engine.sparql(q).collect())) == sorted(
-        map(tuple, engine.sparql(q, backend="sql").collect())
-    )
 
     q2 = (
         PREFIX_BLOCK
@@ -232,9 +221,6 @@ def test_expression_filters(engine, duck):
     WHERE l_extendedprice * (1 - l_discount) > 90000
     """
     assert_matches_oracle(engine.sparql(q2), duck, oracle2)
-    assert sorted(map(tuple, engine.sparql(q2).collect())) == sorted(
-        map(tuple, engine.sparql(q2, backend="sql").collect())
-    )
 
 
 def test_expression_filter_validation():
@@ -254,7 +240,7 @@ def test_expression_filter_validation():
 
 def test_order_by_expression(engine, duck):
     """ORDER BY over an expression (extension): implicit bind, sorted
-    on the computed column, both backends."""
+    on the computed column."""
     q = (
         PREFIX_BLOCK
         + """
@@ -271,9 +257,6 @@ def test_order_by_expression(engine, duck):
     ORDER BY l_extendedprice * (1 - l_discount) DESC, name LIMIT 20
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle, check_order=True)
-    a = [tuple(r) for r in engine.sparql(q).collect()]
-    b = [tuple(r) for r in engine.sparql(q, backend="sql").collect()]
-    assert a == b
 
     with pytest.raises(SparqlParseError, match="DISTINCT or aggregation"):
         parse_sparql(
@@ -324,8 +307,7 @@ def test_not_bound_optional_antijoin(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) > 0
+    assert len(a) > 0
     # complement: BOUND(?tp) == the semi-join side; the two partition
     # the customer set
     q2 = q.replace("!BOUND", "BOUND")
@@ -355,8 +337,7 @@ def test_string_predicates_match_oracle(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) > 0
+    assert len(a) > 0
 
 
 def test_numeric_string_functions_match_oracle(engine, duck):
@@ -379,8 +360,7 @@ def test_numeric_string_functions_match_oracle(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) > 0
+    assert len(a) > 0
 
 
 # --- r4: expression FILTERs inside OPTIONAL (star-scoped, pre-join) -------
@@ -408,8 +388,7 @@ def test_optional_expression_filter_prejoin(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) > 0
+    assert len(a) > 0
     # every customer survives (left join preserved)
     n_cust = engine.sparql(
         PREFIX_BLOCK + "SELECT DISTINCT ?name WHERE { ?c a sa:Customer ; sa:name ?name . }"
@@ -481,8 +460,7 @@ def test_datetime_accessors_match_oracle(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle, check_order=True)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) == 12
+    assert len(a) == 12
 
 
 # --- r4: STRBEFORE/STRAFTER and infix [NOT] IN ----------------------------
@@ -520,24 +498,17 @@ def test_strbefore_strafter_match_oracle(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) > 0
+    assert len(a) > 0
     assert all(r[1] != "" and r[2] == "widget" and r[3] == "" for r in a)
 
 
 def test_str_before_after_empty_separator(spark):
     """SPARQL 1.1 edge semantics: empty separator -> '' (before) / the
-    whole string (after) — exercised through both compilers."""
-    from pyspark.sql import functions as F
-    from sparkall_spark.plans.exprs import parse_expr, to_column, to_sql
+    whole string (after)."""
+    from sparkall_spark.plans.exprs import parse_expr, to_sql
 
     node_b = parse_expr('STRBEFORE(?s, "")')
     node_a = parse_expr('STRAFTER(?s, "")')
-    df = spark.createDataFrame([("abc",)], ["s"]).select(
-        to_column(node_b, lambda v: F.col("s")).alias("b"),
-        to_column(node_a, lambda v: F.col("s")).alias("a"),
-    )
-    assert df.collect()[0].asDict() == {"b": "", "a": "abc"}
     sql_row = spark.sql(
         "SELECT "
         + to_sql(node_b, lambda v: "s")
@@ -549,8 +520,8 @@ def test_str_before_after_empty_separator(spark):
 
 
 def test_filter_in_list_match_oracle(engine, duck):
-    """Infix [NOT] IN over literal lists compiles to a single Catalyst
-    In predicate (DataFrame backend) / SQL IN (both engines)."""
+    """Infix [NOT] IN over literal lists compiles to a single SQL IN
+    predicate (a Catalyst In, pushed down to the scan)."""
     q = (
         PREFIX_BLOCK
         + """
@@ -568,8 +539,7 @@ def test_filter_in_list_match_oracle(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) > 0
+    assert len(a) > 0
     assert {r[1] for r in a} == {"BUILDING", "MACHINERY"}
 
 
@@ -620,8 +590,7 @@ def test_str_and_hash_functions_match_oracle(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) == 25
+    assert len(a) == 25
     with pytest.raises(ExprParseError):
         parse_expr("MD5(?a, ?b)")
 

@@ -2,9 +2,9 @@
 
 Well-defined under the closed mapping model: each described variable
 must be a star subject, whose entity mapping fixes the full predicate
-set.  The DataFrame backend unpivots each source in ONE scan; the SQL
-backend renders one portable statement (per-predicate selects over a
-`sol` CTE).
+set.  The lowering renders one statement over a `sol` CTE and reads
+each relevant source ONCE, exploding all its mapped predicates from an
+array of structs.
 """
 
 import pytest
@@ -47,16 +47,19 @@ def test_describe_parse_and_validation():
         )
 
 
+_REGION1_NATIONS = (
+    PREFIX_BLOCK
+    + """
+    DESCRIBE ?n WHERE {
+        ?n a sa:Nation ; sa:region ?r .
+        FILTER (?r = 1)
+    }
+    """
+)
+
+
 def test_describe_matches_oracle(engine, duck):
-    q = (
-        PREFIX_BLOCK
-        + """
-        DESCRIBE ?n WHERE {
-            ?n a sa:Nation ; sa:region ?r .
-            FILTER (?r = 1)
-        }
-        """
-    )
+    q = _REGION1_NATIONS
     oracle = f"""
     SELECT DISTINCT * FROM (
         SELECT CAST(n_nationkey AS VARCHAR) AS subject,
@@ -73,14 +76,45 @@ def test_describe_matches_oracle(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) == 15  # 5 nations x 3 triples
+    assert len(a) == 15  # 5 nations x 3 triples
     assert engine.sparql(q).columns == ["subject", "predicate", "object"]
 
 
-def test_describe_join_restricted(engine):
-    """DESCRIBE a variable restricted through a join; backends agree,
-    and every mapped predicate of the entity appears."""
+def test_describe_reads_each_source_once(engine):
+    """Plan shape: each described source is scanned once for all its
+    predicates (an array-of-structs explode), not once per predicate:
+    one nation scan for the solution, one for the description."""
+    q = _REGION1_NATIONS
+    plan = engine.sparql(q)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan parquet") <= 2
+    assert "Generate explode" in plan
+
+
+def _customer_triples(ids_sql: str) -> str:
+    """Oracle: every mapped Customer triple for the ids ``ids_sql``
+    selects (column ``k``)."""
+    member = f"c_custkey IN (SELECT k FROM ({ids_sql}))"
+    return f"""
+    SELECT CAST(c_custkey AS VARCHAR) AS subject, '{NS}name' AS predicate,
+           c_name AS object FROM customer WHERE {member}
+    UNION ALL
+    SELECT CAST(c_custkey AS VARCHAR), '{NS}nation',
+           CAST(c_nationkey AS VARCHAR) FROM customer WHERE {member}
+    UNION ALL
+    SELECT CAST(c_custkey AS VARCHAR), '{NS}acctbal',
+           CAST(c_acctbal AS VARCHAR) FROM customer WHERE {member}
+    UNION ALL
+    SELECT CAST(c_custkey AS VARCHAR), '{NS}mktsegment', c_mktsegment
+    FROM customer WHERE {member}
+    UNION ALL
+    SELECT CAST(c_custkey AS VARCHAR), '{RDF_TYPE}', '{NS}Customer'
+    FROM customer WHERE {member}
+    """
+
+
+def test_describe_join_restricted(engine, duck):
+    """DESCRIBE a variable restricted through a join matches the
+    oracle, and every mapped predicate of the entity appears."""
     q = (
         PREFIX_BLOCK
         + """
@@ -92,9 +126,14 @@ def test_describe_join_restricted(engine):
         }
         """
     )
+    ids = """
+        SELECT c_custkey AS k FROM customer
+        JOIN nation ON c_nationkey = n_nationkey
+        WHERE c_acctbal > 9000 AND n_name = 'NATION_20'
+    """
+    oracle = f"SELECT DISTINCT * FROM ({_customer_triples(ids)})"
+    assert_matches_oracle(engine.sparql(q), duck, oracle)
     a = engine.sparql(q).collect()
-    b = engine.sparql(q, backend="sql").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     preds = {r["predicate"] for r in a}
     assert preds == {
         NS + "name", NS + "nation", NS + "acctbal", NS + "mktsegment",
@@ -105,7 +144,7 @@ def test_describe_join_restricted(engine):
     assert len(a) == 5 * len(subjects) and len(subjects) >= 1
 
 
-def test_describe_multiple_variables(engine):
+def test_describe_multiple_variables(engine, duck):
     """DESCRIBE ?c ?n emits both entities' descriptions in one graph."""
     q = (
         PREFIX_BLOCK
@@ -117,8 +156,23 @@ def test_describe_multiple_variables(engine):
         }
         """
     )
+    sol = "SELECT c_custkey, c_nationkey FROM customer WHERE c_acctbal > 9900"
+    oracle = f"""
+    SELECT DISTINCT * FROM (
+        {_customer_triples(f"SELECT c_custkey AS k FROM ({sol})")}
+        UNION ALL
+        SELECT CAST(n_nationkey AS VARCHAR), '{NS}name', n_name FROM nation
+        WHERE n_nationkey IN (SELECT c_nationkey FROM ({sol}))
+        UNION ALL
+        SELECT CAST(n_nationkey AS VARCHAR), '{NS}region',
+               CAST(n_regionkey AS VARCHAR) FROM nation
+        WHERE n_nationkey IN (SELECT c_nationkey FROM ({sol}))
+        UNION ALL
+        SELECT CAST(n_nationkey AS VARCHAR), '{RDF_TYPE}', '{NS}Nation'
+        FROM nation WHERE n_nationkey IN (SELECT c_nationkey FROM ({sol}))
+    )
+    """
+    assert_matches_oracle(engine.sparql(q), duck, oracle)
     a = engine.sparql(q).collect()
-    b = engine.sparql(q, backend="sql").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     types = {r["object"] for r in a if r["predicate"] == RDF_TYPE}
     assert types == {NS + "Customer", NS + "Nation"}

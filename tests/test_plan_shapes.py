@@ -100,10 +100,9 @@ def test_sql_backend_same_plan_shape(engine):
         }
         """
     )
-    p1 = _plan(engine.sparql(q, backend="dataframe"))
-    p2 = _plan(engine.sparql(q, backend="sql"))
+    plan = _plan(engine.sparql(q))
     for marker in ("BroadcastHashJoin", "PushedFilters"):
-        assert (marker in p1) == (marker in p2)
+        assert marker in plan, marker
 
 
 def test_bind_filter_pushes_into_scan(engine):

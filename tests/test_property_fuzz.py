@@ -3,7 +3,7 @@ generated as (SPARQL, oracle-SQL) pairs from one spec and must agree.
 
 Uses hypothesis with a bounded example count so the suite stays fast;
 the generator covers filter ops x typed values x distinct x multi-key
-order x limit over the part/customer stars, and both engine backends.
+order x limit over the part/customer stars.
 """
 
 import math
@@ -82,7 +82,6 @@ query_st = st.fixed_dictionaries(
             unique_by=lambda t: t[0],
         ),
         "limit": st.sampled_from([None, 7, 100]),
-        "backend": st.sampled_from(["dataframe", "sql"]),
     }
 )
 
@@ -177,7 +176,7 @@ def test_random_queries_match_oracle(engine, duck, spec):
         # distinct trivial; still a valid check, keep it
         pass
     sparql, sql = _build(spec)
-    df = engine.sparql(sparql, backend=spec["backend"])
+    df = engine.sparql(sparql)
     assert_matches_oracle(df, duck, sql)
 
 
@@ -198,7 +197,6 @@ join_query_st = st.fixed_dictionaries(
         "with_nation_name": st.booleans(),
         "filters": st.lists(cust_filter_st, min_size=0, max_size=2, unique=True),
         "distinct": st.booleans(),
-        "backend": st.sampled_from(["dataframe", "sql"]),
     }
 )
 
@@ -243,14 +241,14 @@ def test_random_join_queries_match_oracle(engine, duck, spec):
     )
     if sql_filters:
         sql += " WHERE " + " AND ".join(sql_filters)
-    df = engine.sparql(sparql, backend=spec["backend"])
+    df = engine.sparql(sparql)
     assert_matches_oracle(df, duck, sql)
 
 
 # ---------------------------------------------------------------------------
 # BIND expression fuzz: random arithmetic ASTs over part columns must
-# produce identical values through BOTH compilers (Column builder vs
-# ANSI-SQL renderer run on DuckDB).
+# produce identical values through the engine and through the same tree
+# rendered as SQL and run on DuckDB.
 # ---------------------------------------------------------------------------
 
 _EXPR_VARS = {"size": "p_size", "retailprice": "p_retailprice"}
@@ -333,7 +331,6 @@ chain_query_st = st.fixed_dictionaries(
         "bal_filter": st.sampled_from([None, 0, 5000.0]),
         "region_filter": st.sampled_from([None, "REGION_1", "REGION_3"]),
         "distinct": st.booleans(),
-        "backend": st.sampled_from(["dataframe", "sql"]),
     }
 )
 
@@ -384,15 +381,14 @@ def test_random_three_star_chain_matches_oracle(engine, duck, spec):
     )
     if sql_filters:
         sql += " WHERE " + " AND ".join(sql_filters)
-    df = engine.sparql(sparql, backend=spec["backend"])
+    df = engine.sparql(sparql)
     assert_matches_oracle(df, duck, sql)
 
 
 # --------------------------------------------------------------------
 # r4: OPTIONAL block-unit semantics fuzz — random placements of block
 # filters, attach (ON) filters, nesting, and cross-scope comparisons
-# must agree with a generated LEFT-JOIN-subquery oracle on BOTH
-# backends.
+# must agree with a generated LEFT-JOIN-subquery oracle.
 # --------------------------------------------------------------------
 
 optional_spec_st = st.fixed_dictionaries(
@@ -402,7 +398,6 @@ optional_spec_st = st.fixed_dictionaries(
         "nested": st.booleans(),
         "nested_filter": st.sampled_from([None, 200000.0]),
         "nested_attach_crossvar": st.booleans(),
-        "backend": st.sampled_from(["dataframe", "sql"]),
     }
 )
 
@@ -466,5 +461,5 @@ def _build_optional(spec):
 @given(spec=optional_spec_st)
 def test_optional_block_fuzz_matches_left_join_oracle(engine, duck, spec):
     sparql, sql = _build_optional(spec)
-    df = engine.sparql(sparql, backend=spec["backend"])
+    df = engine.sparql(sparql)
     assert_matches_oracle(df, duck, sql)

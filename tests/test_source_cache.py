@@ -1,7 +1,7 @@
 """Resolved-source reuse (``sources.SourceCache``): one Engine resolves
 each file-backed source once and reuses it while the source's file
-listing is unchanged; a changed listing resolves it again.  Also the SQL
-backend's per-call view names (two Engines on one session, two
+listing is unchanged; a changed listing resolves it again.  Also the
+lowering's per-call view names (two Engines on one session, two
 threads)."""
 
 import os
@@ -23,7 +23,6 @@ from tests.conftest import assert_matches_oracle
 from tests.test_entry_contract import SF_DIR as SF01_DIR
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-BACKENDS = ["dataframe", "sql"]
 
 
 @pytest.fixture
@@ -53,10 +52,7 @@ def _construct_jobs(spark, build):
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("backend", BACKENDS)
-def test_second_construct_submits_no_job_and_loads_nothing(
-    spark, sf_dir, loads, backend
-):
+def test_second_construct_submits_no_job_and_loads_nothing(spark, sf_dir, loads):
     engine = Engine(spark, tpch_mappings(sf_dir))
     q = PREFIX_BLOCK + SPARQL_QUERIES["q04_join_five_stars"][0]
     plan = engine.plan(q)
@@ -66,12 +62,12 @@ def test_second_construct_submits_no_job_and_loads_nothing(
         for m in engine.mappings.relevant_sources(star)
     }
 
-    first, _ = _construct_jobs(spark, lambda: engine.sparql(q, backend=backend))
+    first, _ = _construct_jobs(spark, lambda: engine.sparql(q))
     assert Counter(loads) == Counter(expected)  # each distinct source once
     n = first.count()
 
     loads.clear()
-    second, jobs = _construct_jobs(spark, lambda: engine.sparql(q, backend=backend))
+    second, jobs = _construct_jobs(spark, lambda: engine.sparql(q))
     assert loads == [] and jobs == []
     assert second.count() == n
 
@@ -124,20 +120,19 @@ SELECT DISTINCT * FROM (
 """
 
 
-@pytest.mark.parametrize("backend", BACKENDS)
 @pytest.mark.parametrize(
     "query,oracle",
     [(TWO_ORDERS, TWO_ORDERS_ORACLE), (DESCRIBE_OVER_SOURCE, DESCRIBE_ORACLE)],
     ids=["two_stars_one_mapping", "describe_over_scanned_source"],
 )
 def test_one_cached_relation_twice_in_a_plan(
-    spark, sf_dir, duck, loads, backend, query, oracle
+    spark, sf_dir, duck, loads, query, oracle
 ):
     engine = Engine(spark, tpch_mappings(sf_dir))
-    df = engine.sparql(query, backend=backend)
+    df = engine.sparql(query)
     assert max(Counter(loads).values()) == 1  # the repeat is the cached frame
     assert_matches_oracle(df, duck, oracle)
-    assert_matches_oracle(engine.sparql(query, backend=backend), duck, oracle)
+    assert_matches_oracle(engine.sparql(query), duck, oracle)
 
 
 # ---- freshness: a changed listing resolves the source again -------------
@@ -158,24 +153,23 @@ def _people(source: str, source_type: str):
     )
 
 
-def _rows(engine: Engine, q: str, backend: str = "dataframe"):
-    return sorted(map(tuple, engine.sparql(q, backend=backend).collect()))
+def _rows(engine: Engine, q: str):
+    return sorted(map(tuple, engine.sparql(q).collect()))
 
 
-def _fresh(spark, mapping, q, backend="dataframe"):
+def _fresh(spark, mapping, q):
     """The answer of an Engine that has resolved nothing yet."""
-    return _rows(Engine(spark, MappingIndex([mapping])), q, backend)
+    return _rows(Engine(spark, MappingIndex([mapping])), q)
 
 
-@pytest.mark.parametrize("backend", BACKENDS)
-def test_parquet_rewritten_in_place(spark, tmp_path, backend):
+def test_parquet_rewritten_in_place(spark, tmp_path):
     path = str(tmp_path / "people.parquet")
     spark.createDataFrame(
         [(1, "ann", 10), (2, "bob", 20)], "id INT, name STRING, score INT"
     ).write.parquet(path)
     m = _people(path, "parquet")
     engine = Engine(spark, MappingIndex([m]))
-    before = _rows(engine, PEOPLE, backend)
+    before = _rows(engine, PEOPLE)
 
     # same path, different rows, one column renamed (and the mutable
     # mapping edited to match: the key is the reader's inputs, not it)
@@ -184,24 +178,23 @@ def test_parquet_rewritten_in_place(spark, tmp_path, backend):
         "id INT, name STRING, points INT",
     ).write.mode("overwrite").parquet(path)
     m.predicates[NS + "score"] = "points"
-    after = _rows(engine, PEOPLE, backend)
+    after = _rows(engine, PEOPLE)
     assert after != before
-    assert after == _fresh(spark, m, PEOPLE, backend)
+    assert after == _fresh(spark, m, PEOPLE)
 
 
-@pytest.mark.parametrize("backend", BACKENDS)
-def test_part_file_added_to_directory(spark, tmp_path, backend):
+def test_part_file_added_to_directory(spark, tmp_path):
     path = str(tmp_path / "people.parquet")
     schema = "id INT, name STRING, score INT"
     spark.createDataFrame([(1, "ann", 10)], schema).write.parquet(path)
     m = _people(path, "parquet")
     engine = Engine(spark, MappingIndex([m]))
-    before = _rows(engine, PEOPLE, backend)
+    before = _rows(engine, PEOPLE)
 
     spark.createDataFrame([(2, "bob", 20)], schema).write.mode("append").parquet(path)
-    after = _rows(engine, PEOPLE, backend)
+    after = _rows(engine, PEOPLE)
     assert len(after) == len(before) + 1
-    assert after == _fresh(spark, m, PEOPLE, backend)
+    assert after == _fresh(spark, m, PEOPLE)
 
 
 def test_deleted_source_raises_like_load_source(spark, tmp_path):
@@ -248,22 +241,22 @@ def test_glob_source_resolves_every_query(spark, tmp_path, loads):
     assert loads == ["Person", "Person"]
 
 
-# ---- SQL backend on a shared session ------------------------------------
+# ---- one SparkSession, several Engines and threads ----------------------
 
 
 def test_sql_backend_threads_on_shared_session(spark, sf_dir):
     """Two Engines (two scales) share one SparkSession; two threads run
-    q03 on the SQL backend.  Per-call view names keep each query on its
+    q03.  Per-call view names keep each query on its
     own sources, and no view outlives its query."""
     if not os.path.isdir(SF01_DIR) or os.path.samefile(SF01_DIR, sf_dir):
         pytest.skip("needs a second scale next to the test scale")
     q = PREFIX_BLOCK + SPARQL_QUERIES["q03_join_filters"][0]
     engines = [Engine(spark, tpch_mappings(d)) for d in (sf_dir, SF01_DIR)]
-    serial = [e.sparql(q, backend="sql").count() for e in engines]
+    serial = [e.sparql(q).count() for e in engines]
     assert serial[0] != serial[1]
 
     def loop(i: int) -> list[int]:
-        return [engines[i].sparql(q, backend="sql").count() for _ in range(25)]
+        return [engines[i].sparql(q).count() for _ in range(25)]
 
     with ThreadPoolExecutor(2) as pool:
         futures = [pool.submit(loop, i) for i in (0, 1)]

@@ -1,10 +1,9 @@
 import pytest
-from pyspark.sql import functions as F
 
 from sparkall_spark.functions.transforms import (
     TransformError,
-    apply_transform_chain,
-    transform_column,
+    transform_chain_sql,
+    transform_sql,
 )
 
 
@@ -16,57 +15,57 @@ def df(spark):
     )
 
 
-def _vals(df, col_expr, src="num"):
-    return [r["out"] for r in df.select(col_expr.alias("out")).orderBy("id").collect()]
+def _vals(df, expr):
+    return [r["out"] for r in df.selectExpr(f"{expr} AS out", "id").orderBy("id").collect()]
 
 
 def test_toInt_nulls_on_failure(df):
-    col, flt = transform_column(F.col("num"), "toInt")
+    expr, flt = transform_sql("num", "toInt")
     assert flt is None
-    assert _vals(df, col) == [10, 20, None]
+    assert _vals(df, expr) == [10, 20, None]
 
 
 def test_scl_variants(df):
-    base = F.col("num").try_cast("int")
-    col, _ = transform_column(base, "scl(+5)")
-    assert _vals(df, col) == [15, 25, None]
-    col, _ = transform_column(base, "scl(*2)")
-    assert _vals(df, col) == [20, 40, None]
-    col, _ = transform_column(base, "scl(-1)")
-    assert _vals(df, col) == [9, 19, None]
+    base = "TRY_CAST(num AS INT)"
+    expr, _ = transform_sql(base, "scl(+5)")
+    assert _vals(df, expr) == [15, 25, None]
+    expr, _ = transform_sql(base, "scl(*2)")
+    assert _vals(df, expr) == [20, 40, None]
+    expr, _ = transform_sql(base, "scl(-1)")
+    assert _vals(df, expr) == [9, 19, None]
     # the reference's underscore spelling scl(_+61)
-    col, _ = transform_column(base, "scl(_+61)")
-    assert _vals(df, col) == [71, 81, None]
+    expr, _ = transform_sql(base, "scl(_+61)")
+    assert _vals(df, expr) == [71, 81, None]
 
 
 def test_skp_returns_filter(df):
-    col, flt = transform_column(F.col("id"), "skp(2)")
+    expr, flt = transform_sql("id", "skp(2)")
     assert flt is not None
     assert [r["id"] for r in df.filter(flt).collect()] == [1, 3]
 
 
 def test_substit_keeps_nonmatches(df):
-    """Reference bug fixed: when().otherwise() so non-matching rows keep
-    their value (SparkExecutor.scala:219-225 nulls them)."""
-    col, _ = transform_column(F.col("s"), "substit(abc,zzz)")
-    assert _vals(df, col) == ["zzz", "xbc", "abz"]
+    """Reference bug fixed: a CASE so non-matching rows keep their
+    value (SparkExecutor.scala:219-225 nulls them)."""
+    expr, _ = transform_sql("s", "substit(abc,zzz)")
+    assert _vals(df, expr) == ["zzz", "xbc", "abz"]
 
 
 def test_replc(df):
-    col, _ = transform_column(F.col("s"), "replc(bc,XY)")
-    assert _vals(df, col) == ["aXY", "xXY", "abz"]
+    expr, _ = transform_sql("s", "replc(bc,XY)")
+    assert _vals(df, expr) == ["aXY", "xXY", "abz"]
 
 
 def test_prefix_postfix(df):
-    col, _ = transform_column(F.col("s"), "prefix(P_)")
-    assert _vals(df, col) == ["P_abc", "P_xbc", "P_abz"]
-    col, _ = transform_column(F.col("s"), "postfix(_S)")
-    assert _vals(df, col) == ["abc_S", "xbc_S", "abz_S"]
+    expr, _ = transform_sql("s", "prefix(P_)")
+    assert _vals(df, expr) == ["P_abc", "P_xbc", "P_abz"]
+    expr, _ = transform_sql("s", "postfix(_S)")
+    assert _vals(df, expr) == ["abc_S", "xbc_S", "abz_S"]
 
 
 def test_chain_with_filters(df):
-    col, filters = apply_transform_chain(F.col("id"), ["toInt", "scl(*10)", "skp(20)"])
-    out = df.select(col.alias("v"), "id")
+    expr, filters = transform_chain_sql("id", ["toInt", "scl(*10)", "skp(20)"])
+    out = df.selectExpr(f"{expr} AS v", "id")
     for f in filters:
         out = out.filter(f)
     assert sorted(r["v"] for r in out.collect()) == [10, 30]
@@ -74,19 +73,18 @@ def test_chain_with_filters(df):
 
 def test_errors():
     with pytest.raises(TransformError):
-        transform_column(F.col("x"), "nope(1)")
+        transform_sql("x", "nope(1)")
     with pytest.raises(TransformError):
-        transform_column(F.col("x"), "scl(bad)")
+        transform_sql("x", "scl(bad)")
     with pytest.raises(TransformError):
-        transform_column(F.col("x"), "substit(onlyone)")
+        transform_sql("x", "substit(onlyone)")
 
 
 def test_chain_skp_after_scl_engine_order(spark, sf_dir, duck):
-    """Regression (r4): in the ENGINE path, skp's row filter must be
-    applied before withColumn replaces the join column — applying it
-    after re-resolves the filter against the transformed value and
-    double-applies the upstream chain ((x+1)+1 <> 4 instead of
-    (x+1) <> 4), silently dropping the wrong rows."""
+    """Regression (r4): in the engine, skp's row filter compares the
+    value at its own position ((x+1) <> 4); re-resolving it against the
+    transformed column would double-apply the upstream chain
+    ((x+1)+1 <> 4) and silently drop the wrong rows."""
     from tests.conftest import assert_matches_oracle
 
     from sparkall_spark.engine import Engine
@@ -113,3 +111,4 @@ def test_chain_skp_after_scl_engine_order(spark, sf_dir, duck):
         WHERE (CAST(c_nationkey AS INT) + 1) <> 4
         """,
     )
+
